@@ -6021,20 +6021,29 @@ class DuckLakeSpark:
         is lazy just like the reference's DuckDBPyRelation — SURVEY §3.2)."""
         self._pull()
         result = None
-        for stmt in split_statements(query):
-            self.logger.debug("sql: %s", stmt[:200])
-            r = self._execute(stmt)
-            if r is not None:
-                result = r
+        try:
+            for stmt in split_statements(query):
+                self.logger.debug("sql: %s", stmt[:200])
+                r = self._execute(stmt)
+                if r is not None:
+                    result = r
+        except Exception:
+            # catalog frames are edited in place, so a failed statement
+            # can leave unsaved edits behind; outside a transaction the
+            # store is the committed state to fall back to
+            if not self.catalog.in_txn():
+                self.catalog.refresh()
+            raise
         self._push()
         return result
 
     def _pull(self) -> None:
         if self._sync is not None:
-            self._sync.pull(self.catalog)
+            adopted = self._sync.pull(self.catalog)
             self.logger.info(
-                "pulled workbook state (snapshot %s)",
+                "pulled workbook state (snapshot %s): %s",
                 self.catalog.current_snapshot,
+                "adopted sheets" if adopted else "workbook unchanged",
             )
 
     def _push(self) -> None:
@@ -8964,6 +8973,13 @@ class DuckLakeSpark:
         else:
             self._last_scan_file_count = len(paths)
         dels = self.catalog.delete_files(tid, snapshot)
+        if not dels.empty and len(paths) < len(files):
+            # only the delete files of the data files left after skipping
+            # can hide a scanned row; a point read of a file with no
+            # deletes then needs no delete join at all
+            fids = files.loc[files["path"].isin(paths), "data_file_id"]
+            owner = dels["data_file_id"]
+            dels = dels[owner.isin(fids) | owner.isna()]
 
         # -- schema evolution (ALTER ADD/DROP/RENAME COLUMN / ALTER TYPE
         # are catalog-only MVCC transitions; data files keep their
@@ -9051,8 +9067,7 @@ class DuckLakeSpark:
             df = reader.parquet(*paths)
             if need_pos:
                 df = (
-                    reader.parquet(*paths)
-                    .withColumn(
+                    df.withColumn(
                         "__file",
                         self._norm_path(F.col("_metadata.file_path")),
                     )
@@ -9378,9 +9393,10 @@ class DuckLakeSpark:
             return self._scan_files_encrypted(
                 keyed, self._DELETE_STRUCT, with_pos=False
             )
-        return self.spark.read.parquet(
+        # the declared schema spares Spark a schema-inference job
+        return self.spark.read.schema(self._DELETE_STRUCT).parquet(
             *sorted(set(dels["path"]))
-        ).select("file_path", "pos")
+        )
 
     def _register_deletes(
         self, name: str, tid: int, hit_pos: DataFrame, commit: bool = True

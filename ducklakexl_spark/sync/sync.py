@@ -13,6 +13,17 @@ delta-push as its planned optimization (README.md:160-163; its current
 code clears+rewrites all ~19 sheets per statement).  A typical DML
 statement touches 4-6 catalog tables, so this drops the per-statement
 HTTP round-trips by ~3x on the OneDrive backend.
+
+Pull is changed-workbook-only: it reads every sheet (one fan-out) and
+fingerprints each raw payload the same way.  When every non-empty sheet
+matches the payload this instance last pushed or adopted, the workbook
+is unchanged and the pull returns without coercing a cell or touching
+the catalog store; unsaved local state (a ``compact()``, an open
+transaction) therefore survives it.  Only when some sheet differs (an
+external edit, another writer's push) does the pull adopt, exactly like
+the reference: every sheet is coerced and replaces its catalog table,
+and the store is rewritten under its commit lock.  A backend that
+re-formats cells on a round trip never matches and always adopts.
 """
 
 from __future__ import annotations
@@ -83,9 +94,11 @@ class WorkbookSync:
         else:
             self.push(catalog)
 
-    def pull(self, catalog: DuckLakeCatalog) -> None:
-        """Workbook → catalog: read every sheet, coerce to declared dtypes,
-        truncate-and-replace the catalog tables, atomic store commit.
+    def pull(self, catalog: DuckLakeCatalog) -> bool:
+        """Workbook → catalog: read every sheet; unless the workbook is
+        unchanged since this instance last synced it, coerce to declared
+        dtypes, truncate-and-replace the catalog tables, atomic store
+        commit.  Returns whether remote state was adopted.
 
         Backends exposing ``read_sheets`` get the concurrent per-sheet
         fan-out (one gather over ~19 sheets instead of serialized
@@ -96,19 +109,18 @@ class WorkbookSync:
             results = self.workbook.read_sheets([s for _t, s in items])
         else:
             results = [self.workbook.read_sheet(s) for _t, s in items]
-        new_tables = {}
-        for (t, _sheet), (header, rows) in zip(items, results):
-            if not header:
-                continue  # empty sheet: keep local table (fresh workbook)
-            new_tables[t] = conform(t, pull_coerce(t, header, rows))
-        if not new_tables:
-            return
+        # empty sheet: keep local table (fresh workbook)
+        raw = [(t, h, r) for (t, _s), (h, r) in zip(items, results) if h]
+        if all(self._synced.get(t) == _fingerprint(h, r) for t, h, r in raw):
+            return False
+        new_tables = {t: conform(t, pull_coerce(t, h, r)) for t, h, r in raw}
         # only adopt a remote state that is a valid catalog (has snapshots)
         snap = new_tables.get("ducklake_snapshot")
         if snap is None or snap.empty:
-            return
+            return False
         catalog.tables.update(new_tables)
-        catalog.store.save(catalog.tables)
+        with catalog.store.commit_lock():
+            catalog.store.save(catalog.tables)
         # keep the LOCAL store's optimistic-concurrency baseline in sync
         # with the adoption — otherwise the first write after an
         # adopt-pull spuriously raises ConcurrentWriteError against our
@@ -123,6 +135,7 @@ class WorkbookSync:
         self._remote_snapshot = _max_snapshot(
             *push_serialize("ducklake_snapshot", catalog.tables["ducklake_snapshot"])
         )
+        return True
 
     def push(self, catalog: DuckLakeCatalog, force: bool = False) -> int:
         """Catalog → workbook: serialize every table, clear+rewrite the
@@ -130,7 +143,10 @@ class WorkbookSync:
         rewrites all — used when remote state is unknown).  Concurrent
         fan-out via ``write_sheets`` when the backend has it (the
         reference's _session_push_all, ducklakexl.py:539-550).  Returns
-        the number of sheets written."""
+        the number of sheets written.  Inside an open transaction nothing
+        is written: the COMMIT or ROLLBACK statement publishes."""
+        if catalog.in_txn():
+            return 0
         dirty = []
         for t, sheet in self._sheet_for.items():
             header, rows = push_serialize(t, catalog.tables[t])

@@ -193,6 +193,29 @@ def test_file_skipping_by_stats(lake):
     assert rows(out.select("id")) == [(100,), (200,)]
 
 
+def test_skipped_scan_joins_only_its_files_deletes(lake):
+    lake.sql("CREATE TABLE t(id INTEGER, val VARCHAR)")
+    lake.sql("INSERT INTO t VALUES (1,'a'),(2,'b')")
+    lake.sql("INSERT INTO t VALUES (100,'x'),(200,'y')")
+    lake.sql("DELETE FROM t WHERE id = 200")
+    sc = lake.spark.sparkContext
+    sc.setJobGroup("scan-build", "building scans runs no Spark job")
+    try:
+        low = lake.table("t", predicates=[("id", "<", 50)])
+        high = lake.table("t", predicates=[("id", ">", 50)])
+        full = lake.table("t")
+        assert list(sc.statusTracker().getJobIdsForGroup("scan-build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the file holding ids 1-2 has no delete file: its scan has no join
+    plan = low._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan
+    assert rows(low.select("id")) == [(1,), (2,)]
+    assert rows(high.select("id")) == [(100,)]
+    assert rows(full.select("id")) == [(1,), (2,), (100,)]
+    assert rows(lake.sql("SELECT id FROM t WHERE id = 200")) == []
+
+
 def test_persistence_across_instances(spark, tmp_path):
     lake1 = DuckLakeSpark(
         spark=spark,

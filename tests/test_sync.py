@@ -554,3 +554,167 @@ def test_user_provided_logger(spark, tmp_path):
     assert any(m.startswith("sql: CREATE TABLE lt") for m in records)
     assert any("pushed" in m and "sheet" in m for m in records)
     assert any(m.startswith("pulled workbook state") for m in records)
+
+
+# ------------------------------------------------- no-op pull and its fallout
+
+
+def _wb_lake(spark, tmp_path, cat="cat"):
+    return DuckLakeSpark(
+        spark=spark,
+        excel_file=str(tmp_path / "wb.csvdir"),
+        data_path=str(tmp_path / "data"),
+        local_catalog=str(tmp_path / cat),
+    )
+
+
+def _store_snapshot(tmp_path, cat="cat") -> int:
+    """Latest snapshot a fresh reader of the catalog store sees."""
+    from ducklakexl_spark.catalog import CatalogStore, DuckLakeCatalog
+
+    fresh = DuckLakeCatalog(
+        CatalogStore(str(tmp_path / cat)), str(tmp_path / "data")
+    )
+    return int(fresh.current_snapshot)
+
+
+def _sheet_snapshots(tmp_path) -> list[int]:
+    header, rows = CsvWorkbook(str(tmp_path / "wb.csvdir")).read_sheet(
+        sheet_name("ducklake_snapshot")
+    )
+    i = header.index("snapshot_id")
+    return sorted(int(r[i]) for r in rows)
+
+
+def test_unchanged_workbook_pull_saves_nothing(spark, tmp_path, monkeypatch,
+                                               caplog):
+    """Reads on an unchanged workbook never rewrite the catalog store;
+    an external edit to one sheet is still adopted by the next pull."""
+    import logging
+
+    from ducklakexl_spark.catalog.store import CatalogStore
+
+    lake = _wb_lake(spark, tmp_path)
+    lake.sql("CREATE TABLE t(id INTEGER)")
+    lake.sql("INSERT INTO t VALUES (1)")
+    saves = []
+    orig = CatalogStore.save
+    monkeypatch.setattr(
+        CatalogStore, "save",
+        lambda self, tables: (saves.append(1), orig(self, tables))[1],
+    )
+    caplog.set_level(logging.INFO, logger="ducklakexl_spark")
+    for _ in range(3):
+        assert lake.sql("SELECT id FROM t").collect()[0][0] == 1
+    assert saves == []
+    assert sum("workbook unchanged" in m for m in caplog.messages) == 3
+
+    # external edit: one metadata row added straight to its sheet
+    wb = CsvWorkbook(str(tmp_path / "wb.csvdir"))
+    meta = lake.catalog.tables["ducklake_metadata"]
+    edited = pd.concat(
+        [meta, pd.DataFrame({"key": ["edited_by"], "value": ["hand"]})],
+        ignore_index=True,
+    )
+    wb.write_sheet(
+        sheet_name("ducklake_metadata"),
+        *push_serialize("ducklake_metadata", edited),
+    )
+    caplog.clear()
+    lake.sql("SELECT id FROM t").collect()
+    assert len(saves) == 1
+    assert any("adopted sheets" in m for m in caplog.messages)
+    meta = lake.catalog.tables["ducklake_metadata"]
+    assert list(meta.loc[meta["key"] == "edited_by", "value"]) == ["hand"]
+
+
+def test_compaction_survives_next_sql(spark, tmp_path):
+    """compact() commits to the store only; the next sql() must keep the
+    compacted file set and snapshot (not re-adopt the older workbook),
+    and its push publishes them."""
+    lake = _wb_lake(spark, tmp_path)
+    lake.sql("CREATE TABLE t(id INTEGER)")
+    for i in range(3):
+        lake.sql(f"INSERT INTO t VALUES ({i})")
+    tid = lake.catalog.table_id("t")
+    assert len(lake.catalog.data_files(tid)) == 3
+    assert lake.compact("t")["compacted"]
+    snap = int(lake.catalog.current_snapshot)
+
+    rows = sorted(r[0] for r in lake.sql("SELECT id FROM t").collect())
+    assert rows == [0, 1, 2]
+    assert int(lake.catalog.current_snapshot) == snap
+    assert len(lake.catalog.data_files(tid)) == 1
+    assert _store_snapshot(tmp_path) == snap
+    assert _sheet_snapshots(tmp_path)[-1] == snap
+
+    # a second engine adopting the workbook sees the compacted layout
+    other = _wb_lake(spark, tmp_path, cat="cat2")
+    assert len(other.catalog.data_files(other.catalog.table_id("t"))) == 1
+    assert sorted(r[0] for r in other.sql("SELECT id FROM t").collect()) == [
+        0, 1, 2,
+    ]
+
+
+def test_open_transaction_stays_private(spark, tmp_path):
+    """Mid-transaction, neither the catalog store nor the workbook shows
+    uncommitted state; COMMIT publishes to both."""
+    lake = _wb_lake(spark, tmp_path)
+    lake.sql("CREATE TABLE t(id INTEGER)")
+    lake.sql("INSERT INTO t VALUES (1)")
+    committed = int(lake.catalog.current_snapshot)
+    sheet_before = _sheet_snapshots(tmp_path)
+
+    lake.sql("BEGIN")
+    lake.sql("INSERT INTO t VALUES (2)")
+    assert sorted(r[0] for r in lake.sql("SELECT id FROM t").collect()) == [
+        1, 2,
+    ]
+    assert _store_snapshot(tmp_path) == committed
+    assert _sheet_snapshots(tmp_path) == sheet_before
+
+    lake.sql("COMMIT")
+    assert _store_snapshot(tmp_path) == committed + 1
+    assert _sheet_snapshots(tmp_path) == sheet_before + [committed + 1]
+    other = _wb_lake(spark, tmp_path, cat="cat2")
+    assert sorted(r[0] for r in other.sql("SELECT id FROM t").collect()) == [
+        1, 2,
+    ]
+
+
+def test_failed_statement_leaves_no_trace(spark, tmp_path, monkeypatch):
+    """A statement that fails after editing catalog frames in memory is
+    dropped whole; statements that committed before it in the same
+    sql() call are kept."""
+    from ducklakexl_spark.catalog.catalog import DuckLakeCatalog
+
+    lake = _wb_lake(spark, tmp_path)
+    lake.sql("CREATE TABLE t(id INTEGER)")
+    lake.sql("INSERT INTO t VALUES (1)")
+    base = int(lake.catalog.current_snapshot)
+    orig = DuckLakeCatalog._checked_save
+    failed = []
+
+    def flaky_save(self):
+        # the second commit of the next call fails once, after the
+        # INSERT already added its snapshot and file rows in memory
+        if not failed and int(self.current_snapshot) == base + 2:
+            failed.append(1)
+            raise RuntimeError("injected save failure")
+        return orig(self)
+
+    monkeypatch.setattr(DuckLakeCatalog, "_checked_save", flaky_save)
+    with pytest.raises(RuntimeError, match="injected"):
+        lake.sql("INSERT INTO t VALUES (5); INSERT INTO t VALUES (6)")
+    assert failed
+    assert int(lake.catalog.current_snapshot) == base + 1
+    assert sorted(r[0] for r in lake.sql("SELECT id FROM t").collect()) == [
+        1, 5,
+    ]
+    lake.sql("INSERT INTO t VALUES (7)")
+    assert _store_snapshot(tmp_path) == base + 2
+    assert _sheet_snapshots(tmp_path)[-1] == base + 2
+    other = _wb_lake(spark, tmp_path, cat="cat2")
+    assert sorted(r[0] for r in other.sql("SELECT id FROM t").collect()) == [
+        1, 5, 7,
+    ]

@@ -8061,19 +8061,50 @@ class DuckLakeSpark:
         inl = self.catalog.inlined_rows(tid, snapshot)
         if inl.empty:
             return df
+        # a row's JSON keys are the column names live when it was
+        # inlined: read each column under the name it had then, and a
+        # column born after the row as its initial_default or NULL
+        all_cols = self.catalog.tables["ducklake_column"]
+        all_cols = all_cols[all_cols["table_id"] == tid]
+        names_at: dict[str, list[tuple[str, int, float]]] = {}
+        defaults: dict[str, tuple[str, int]] = {}
+        for c in self.catalog.columns(tid, snapshot).itertuples():
+            hist = all_cols[all_cols["column_id"] == c.column_id]
+            names_at[c.column_name] = [
+                (h.column_name, int(h.begin_snapshot),
+                 float("inf") if pd.isna(h.end_snapshot) else h.end_snapshot)
+                for h in hist.itertuples()
+            ]
+            if pd.notna(c.initial_default):
+                defaults[c.column_name] = (
+                    str(c.initial_default), int(hist["begin_snapshot"].min())
+                )
+
+        def stored_name(col: str, begin: int) -> str | None:
+            for n, b, e in names_at[col]:
+                if b <= begin < e:
+                    return n
+            return None
+
         data = []
         for r in inl.itertuples():
             obj = json.loads(r.row_json)
-            row = {
-                f.name: _inline_decode_value(obj.get(f.name), f.dataType)
-                for f in schema.fields
-            }
+            begin = int(r.begin_snapshot)
+            row = {}
+            for f in schema.fields:
+                n = stored_name(f.name, begin)
+                row[f.name] = (
+                    None if n is None
+                    else _inline_decode_value(obj.get(n), f.dataType)
+                )
+            row["__ibegin"] = begin
             if with_position:
                 row["__file"] = f"__inlined__/{tid}"
                 row["__pos"] = int(r.row_id)
             data.append(row)
         s = T.StructType(
             list(schema.fields)
+            + [T.StructField("__ibegin", T.LongType())]
             + (
                 [
                     T.StructField("__file", T.StringType()),
@@ -8083,7 +8114,17 @@ class DuckLakeSpark:
                 else []
             )
         )
-        return df.unionByName(self.spark.createDataFrame(data, s))
+        rows = self.spark.createDataFrame(data, s)
+        for f in schema.fields:
+            if f.name in defaults:
+                dflt, born = defaults[f.name]
+                rows = rows.withColumn(
+                    f.name,
+                    F.when(
+                        F.col("__ibegin") < born, F.expr(dflt).cast(f.dataType)
+                    ).otherwise(F.col(f.name)),
+                )
+        return df.unionByName(rows.drop("__ibegin"))
 
     def _generated_cols(
         self, tid: int, schema: T.StructType, snapshot: int | None = None
@@ -8995,15 +9036,55 @@ class DuckLakeSpark:
         live_cols = self.catalog.columns(tid, snapshot)
         all_cols = self.catalog.tables["ducklake_column"]
         all_cols = all_cols[all_cols["table_id"] == tid]
-        hist_names: dict[str, list[str]] = {}
+        #
+        # A file holds a column's values under the name the column had
+        # when the file was committed, and none if it predates the column
+        # (its first catalog row; renames keep the column_id): such a file
+        # reads the initial_default (the spec's ADD COLUMN … DEFAULT, no
+        # rewrite) or NULL.  Reading every name the column ever had is
+        # exact unless the column has a DEFAULT or shares a name with
+        # another column (a dropped and re-added namesake, a renamed-away
+        # one); those resolve per file on its begin_snapshot.
+        hist_names = {n: [n] for n in live_cols["column_name"]}
+        spans: dict[str, list[tuple[str, int, object]]] = {}
+        resolved: dict[str, str] = {}  # column -> its pre-birth value
         renamed = False
-        for r in live_cols.itertuples():
-            hist = all_cols[all_cols["column_id"] == r.column_id].sort_values(
-                "begin_snapshot", ascending=False
-            )
-            names = list(dict.fromkeys(hist["column_name"]))
-            hist_names[r.column_name] = names
-            renamed = renamed or len(names) > 1
+        if (
+            len(all_cols) > len(live_cols)
+            or live_cols["initial_default"].notna().any()
+        ):
+            # some column was renamed, retyped, dropped or added with a
+            # DEFAULT (otherwise every catalog row is live and no file
+            # predates a column it must default)
+            scanned_names = {f.name for f in schema.fields}
+            first_file = int(files["begin_snapshot"].min())
+            ids_per_name = all_cols.groupby("column_name")["column_id"].nunique()
+            shared_names = set(ids_per_name.index[ids_per_name > 1])
+            for r in live_cols.itertuples():
+                hist = all_cols[
+                    all_cols["column_id"] == r.column_id
+                ].sort_values("begin_snapshot", ascending=False)
+                names = list(dict.fromkeys(hist["column_name"]))
+                hist_names[r.column_name] = names
+                renamed = renamed or len(names) > 1
+                if r.column_name not in scanned_names:
+                    continue
+                pre_birth = int(hist["begin_snapshot"].min()) > first_file
+                has_default = pd.notna(r.initial_default)
+                if (has_default and pre_birth) or (
+                    not shared_names.isdisjoint(names)
+                    and (pre_birth or len(names) > 1)
+                ):
+                    resolved[r.column_name] = (
+                        str(r.initial_default) if has_default else "NULL"
+                    )
+                    spans[r.column_name] = list(
+                        zip(
+                            hist["column_name"],
+                            hist["begin_snapshot"],
+                            hist["end_snapshot"],
+                        )
+                    )
 
         if renamed:
             read_fields, seen = [], set()
@@ -9036,18 +9117,7 @@ class DuckLakeSpark:
                 ]
             )
         reader = self.spark.read.schema(read_struct)
-
-        # columns added with a DEFAULT read that default from files
-        # written BEFORE the column existed (the spec's initial_default:
-        # no rewrite); rows written after keep their stored NULLs
-        scanned_names = {f.name for f in schema.fields}
-        init_defaults = [
-            (r.column_name, str(r.initial_default), int(r.begin_snapshot))
-            for r in live_cols.itertuples()
-            if pd.notna(r.initial_default)
-            and r.column_name in scanned_names
-        ]
-        need_pos = (not dels.empty) or with_position or bool(init_defaults)
+        need_pos = (not dels.empty) or with_position or bool(resolved)
         key_by_path = {
             p: (None if pd.isna(k) else str(k))
             for p, k in zip(files["path"], files["encryption_key"])
@@ -9073,23 +9143,7 @@ class DuckLakeSpark:
                     )
                     .withColumn("__pos", F.col("_metadata.row_index"))
                 )
-        if renamed:
-            sel = [
-                (
-                    F.coalesce(*[F.col(n) for n in hist_names[f.name]])
-                    if len(hist_names[f.name]) > 1
-                    else F.col(hist_names[f.name][0])
-                ).alias(f.name)
-                for f in schema.fields
-            ]
-            if "__file" in df.columns:
-                df = df.select(*sel, "__file", "__pos")
-            else:
-                df = df.select(*sel)
-        for c in time_cols:
-            df = df.withColumn(c, F.col(c).cast("time(6)"))
-        if init_defaults:
-            dtype_by_name = {f.name: f.dataType for f in schema.fields}
+        if resolved:
             fmeta = self.spark.createDataFrame(
                 [
                     (self._norm_path_str(p), int(b))
@@ -9100,16 +9154,32 @@ class DuckLakeSpark:
             df = df.join(
                 F.broadcast(fmeta), df["__file"] == fmeta["__dfile"], "left"
             )
-            for cname, dflt, cbegin in init_defaults:
-                df = df.withColumn(
-                    cname,
-                    F.when(
-                        (F.col("__fbegin") < cbegin)
-                        & F.col(cname).isNull(),
-                        F.expr(dflt).cast(dtype_by_name[cname]),
-                    ).otherwise(F.col(cname)),
+
+        def value(f: T.StructField):
+            name, names = f.name, hist_names[f.name]
+            if name in resolved:
+                fbegin = F.col("__fbegin")
+                out = F.expr(resolved[name]).cast(
+                    T.StringType() if name in time_cols else f.dataType
                 )
-            df = df.drop("__dfile", "__fbegin")
+                for n, b, e in spans[name]:
+                    in_span = fbegin >= int(b)
+                    if pd.notna(e):
+                        in_span = in_span & (fbegin < int(e))
+                    out = F.when(in_span, F.col(n)).otherwise(out)
+                return out
+            if len(names) > 1:
+                return F.coalesce(*[F.col(n) for n in names])
+            return F.col(name)
+
+        if renamed or resolved:
+            sel = [value(f).alias(f.name) for f in schema.fields]
+            if "__file" in df.columns:
+                df = df.select(*sel, "__file", "__pos")
+            else:
+                df = df.select(*sel)
+        for c in time_cols:
+            df = df.withColumn(c, F.col(c).cast("time(6)"))
         if not dels.empty:
             del_df = self._read_delete_rows(dels)
             df = df.join(
@@ -9327,7 +9397,7 @@ class DuckLakeSpark:
             f" FROM __del_t {t_alias} WHERE EXISTS"
             f" (SELECT 1 FROM __del_s {s_alias} WHERE {cond})"
         )
-        self._register_deletes(name, tid, hit_pos)
+        self._register_deletes(name, tid, hit_pos, predicates=preds)
         return None
 
     def _delete(self, name: str, where: str | None) -> None:
@@ -9364,11 +9434,13 @@ class DuckLakeSpark:
             ]
             file_hits = hit_pos.filter(F.col("file_path") != marker)
             if inl_ids:
-                self._register_deletes(name, tid, file_hits, commit=False)
+                self._register_deletes(
+                    name, tid, file_hits, commit=False, predicates=preds
+                )
                 self.catalog.end_inlined_rows(tid, inl_ids, commit=True)
                 return None
             hit_pos = file_hits
-        self._register_deletes(name, tid, hit_pos)
+        self._register_deletes(name, tid, hit_pos, predicates=preds)
         return None
 
     _DELETE_STRUCT = T.StructType(
@@ -9399,59 +9471,67 @@ class DuckLakeSpark:
         )
 
     def _register_deletes(
-        self, name: str, tid: int, hit_pos: DataFrame, commit: bool = True
+        self,
+        name: str,
+        tid: int,
+        hit_pos: DataFrame,
+        commit: bool = True,
+        predicates: list[tuple[str, str, object]] | None = None,
     ) -> bool:
         """Write + register positional delete files for ``hit_pos``
         (DataFrame of file_path, pos against the LIVE scan).  The
         DuckLake-spec shape: ONE delete parquet per touched data file
-        (repartition on file_path — at scale each touched file's delete
-        set is written by its own task; untouched files aren't read or
-        rewritten at all).  The new delete set is cumulative: prior
-        delete rows for touched files fold in, so a data file always has
-        exactly one live delete file.  Returns False if nothing matched.
-        ``commit=False`` stages the catalog rows into the caller's next
-        commit (MERGE's atomic delete+append snapshot)."""
-        import hashlib
+        under ``__part=<md5(file_path)>``; untouched files aren't read or
+        rewritten at all.  The new delete set is cumulative: prior delete
+        rows of touched files fold in, so a data file always has exactly
+        one live delete file.
 
-        new = hit_pos.distinct().withColumn("__new", F.lit(1))
+        One shuffle feeds the write.  The new hits and the old delete
+        rows of the data files the hit scan kept (``predicates`` are its
+        file-skipping predicates; None means every file) cluster on
+        file_path; positions are deduplicated and the groups without a
+        new row dropped inside that clustering; the catalog's counts come
+        from the written footers (a file's new rows are its footer count
+        minus its old ``delete_count``), so no checkpoint and no stats
+        job run.  Returns False, leaving no directory, if nothing
+        matched.  ``commit=False`` stages the catalog rows into the
+        caller's next commit (MERGE's atomic delete+append snapshot)."""
+        from pyspark.sql import Window
+
+        files = self.catalog.data_files(tid)
+        paths = list(files["path"])
+        if predicates:
+            paths = self._skip_files(tid, None, paths, predicates)
+            if not paths:
+                return False  # the hit scan read no file
+        # a delete file without an owning data file stays live as it is;
+        # only owned ones fold into their file's new delete file, so the
+        # owner's old delete_count is exactly what the new file carries over
+        fids = files.loc[files["path"].isin(paths), "data_file_id"]
         dels = self.catalog.delete_files(tid)
+        dels = dels[dels["data_file_id"].isin(fids)]
+        full = hit_pos.select("file_path", "pos", F.lit(1).alias("__new"))
         if not dels.empty:
-            # live-scan rows are never already-deleted, so old and new
-            # delete sets are disjoint — a plain union, no distinct
+            # live-scan rows are never already-deleted, so the old rows
+            # never collide with a new hit
             old = self._read_delete_rows(dels).withColumn("__new", F.lit(0))
-            touched = new.select("file_path").distinct()
-            old = old.join(F.broadcast(touched), "file_path", "left_semi")
-            full = new.unionByName(old)
-        else:
-            full = new
-        full = full.localCheckpoint(eager=True)  # one scan feeds both jobs
-        # one aggregation yields per-file totals AND the new-row count —
-        # no separate count() job
-        stats = (
-            full.groupBy("file_path")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("__new").alias("new_cnt"),
+            full = full.unionByName(old)
+        # hash clustering on file_path already satisfies both the dedup's
+        # and the window's distribution: neither adds an exchange
+        clustered = (
+            full.repartition("file_path")
+            .dropDuplicates(["file_path", "pos"])
+            .withColumn(
+                "__hit", F.max("__new").over(Window.partitionBy("file_path"))
             )
-            .collect()
+            .filter(F.col("__hit") == 1)
+            .select("file_path", "pos", F.md5("file_path").alias("__part"))
         )
-        if not stats:
-            return False
-        removed = int(sum(r["new_cnt"] for r in stats))
         out_dir = os.path.join(
             self.data_path, name, f"delete-{uuid.uuid4().hex[:12]}"
         )
-        dfiles = self.catalog.data_files(tid)
-        fid_by_path = {
-            self._norm_path_str(p): int(i)
-            for i, p in zip(dfiles["data_file_id"], dfiles["path"])
-        }
-        entries = []
-        clustered = (
-            full.withColumn("__part", F.md5("file_path"))
-            .repartition(F.col("__part"))
-            .select("file_path", "pos", "__part")
-        )
+        # md5 partition value -> (registered path, key, rows, bytes)
+        written: dict[str, tuple[str, str | None, int, int]] = {}
         if self.catalog.encrypted:
             # delete files carry their own PME keys, same as data files
             from ducklakexl_spark import crypto
@@ -9460,48 +9540,49 @@ class DuckLakeSpark:
             fn = crypto.make_encrypted_writer(
                 out_dir, ["__part"], self._writer_options().get("compression")
             )
-            res = clustered.mapInArrow(
+            for r in clustered.mapInArrow(
                 fn, "path string, key string, part string"
-            ).collect()
-            by_md5 = {json.loads(r["part"])[0]: r for r in res}
-            for r in stats:
-                p = r["file_path"]
-                if p not in fid_by_path:
-                    continue
-                w = by_md5[hashlib.md5(p.encode()).hexdigest()]
-                entries.append(
-                    {
-                        "data_file_id": fid_by_path[p],
-                        "path": w["path"],
-                        "delete_count": int(r["cnt"]),
-                        "file_size_bytes": iofs.getsize(w["path"]),
-                        "encryption_key": w["key"],
-                    }
+            ).collect():
+                meta = crypto.open_parquet(r["path"], r["key"]).metadata
+                written[json.loads(r["part"])[0]] = (
+                    r["path"], r["key"], meta.num_rows, iofs.getsize(r["path"])
                 )
         else:
             clustered.write.mode("overwrite").partitionBy("__part").parquet(
                 out_dir
             )
-            for r in stats:
-                p = r["file_path"]
-                if p not in fid_by_path:
+            for fp, size in iofs.list_files(out_dir, recursive=True):
+                if not fp.endswith(".parquet"):
                     continue
-                leaf = os.path.join(
-                    out_dir, f"__part={hashlib.md5(p.encode()).hexdigest()}"
+                leaf = os.path.dirname(fp)
+                part = leaf.rsplit("__part=", 1)[1]
+                _, _, n, b = written.get(part, (leaf, None, 0, 0))
+                written[part] = (
+                    leaf, None, n + iofs.parquet_metadata(fp).num_rows, b + size
                 )
-                size = sum(
-                    sz
-                    for fp, sz in iofs.list_files(leaf)
-                    if fp.endswith(".parquet")
-                )
-                entries.append(
-                    {
-                        "data_file_id": fid_by_path[p],
-                        "path": leaf,
-                        "delete_count": int(r["cnt"]),
-                        "file_size_bytes": size,
-                    }
-                )
+        fid_by_md5 = {
+            hashlib.md5(self._norm_path_str(p).encode()).hexdigest(): int(i)
+            for i, p in zip(files["data_file_id"], files["path"])
+        }
+        old_count = dels.groupby("data_file_id")["delete_count"].sum()
+        entries, removed = [], 0
+        for part, (path, key, n, size) in written.items():
+            fid = fid_by_md5.get(part)
+            if fid is None:
+                continue
+            removed += n - int(old_count.get(fid, 0))
+            entries.append(
+                {
+                    "data_file_id": fid,
+                    "path": path,
+                    "delete_count": n,
+                    "file_size_bytes": size,
+                    "encryption_key": key,
+                }
+            )
+        if not entries:
+            iofs.rmtree(out_dir)
+            return False
         self.catalog.register_delete_files(tid, entries, removed, commit=commit)
         return True
 
@@ -9730,6 +9811,7 @@ class DuckLakeSpark:
         # skipped rows as source-unmatched).
         matched_view = "__merge_t"
         self.last_match_scan_files = None
+        preds: list[tuple[str, str, object]] = []
         if matched_cl:
             pruned, preds = self._prune_by_source_bounds(
                 tdf, sdf, cond, t_alias, s_alias, cols, s_cols
@@ -9919,8 +10001,13 @@ class DuckLakeSpark:
                 n_new = new_rows.count()
         if del_pos is not None:
             # with appends coming, stage the deletes into the appends'
-            # commit; a delete-only merge commits its own snapshot
-            self._register_deletes(name, tid, del_pos, commit=(n_new == 0))
+            # commit; a delete-only merge commits its own snapshot.  The
+            # BY SOURCE arms scan every file, the MATCHED arms only the
+            # files left by the source-bound predicates.
+            self._register_deletes(
+                name, tid, del_pos, commit=(n_new == 0),
+                predicates=None if bysrc_cl else preds,
+            )
         if n_new > 0:
             self._write_dataframe(name, new_rows)
         return None

@@ -232,8 +232,8 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a plain min/max/count aggregate — map-side partials, no ordered
     # collect of any kind — carries all the information, and the
     # per-user fold over ≤4.3k chunk summaries counts the cross-chunk
-    # gaps.  The gap compare keeps the r8 floor-second semantics
-    # (cast ts to long) that four decades of sweeps pinned.
+    # gaps.  Gaps compare in microseconds, as the oracle's interval
+    # compare does: a gap of 1800.05 s is a boundary.
     ev = load(spark, sf_dir, "events").select("user_id", "ts")
     per_chunk = (
         ev.withColumn(
@@ -259,8 +259,8 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.when(
                     acc.prev.isNotNull()
                     & (
-                        c.t0.cast("long") - acc.prev.cast("long")
-                        > 30 * 60
+                        F.unix_micros(c.t0) - F.unix_micros(acc.prev)
+                        > 30 * 60 * 1_000_000
                     ),
                     1,
                 ).otherwise(0)

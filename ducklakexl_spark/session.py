@@ -18,6 +18,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+_MIB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def max_result_size(driver_mem: str) -> str:
+    """``spark.driver.maxResultSize`` for a driver heap of ``driver_mem``
+    (a Spark memory string; a bare number is MiB): half the heap, capped
+    at 8g.  A collect() too large for the driver then fails fast with
+    the maxResultSize error instead of running the driver out of memory.
+    """
+    s = driver_mem.strip().lower().removesuffix("b")
+    unit = s[-1] if s and s[-1] in _MIB else "m"
+    mib = float(s.rstrip("kmgt")) * _MIB[unit]
+    return f"{max(1, min(int(mib) // 2, 8 * 1024))}m"
+
+
 def get_spark(
     app_name: str = "ducklakexl_spark",
     master: str | None = None,
@@ -28,6 +43,9 @@ def get_spark(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    driver_mem = (extra_conf or {}).get(
+        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -51,14 +69,14 @@ def get_spark(
         # session tz makes it the same wall-clock, and scan-level min/max
         # pushdown on timestamp columns survives (NTZ + cast would not)
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         # collect() of a large declared-query result (the bench/driver
         # contract materializes every query via collect) trips the 1 GiB
         # default at sf100 — dedup_minhash_lsh's 25M-pair result is
-        # ~1.1 GiB serialized.  8g stays far under the driver heap; this
-        # is the §5 "raise it only if the driver truly has the memory"
-        # case, not a license to collect corpus-sized frames.
-        .config("spark.driver.maxResultSize", "8g")
+        # ~1.1 GiB serialized.  Half the driver heap, at most 8g: the
+        # §5 "raise it only if the driver truly has the memory" case,
+        # not a license to collect corpus-sized frames.
+        .config("spark.driver.maxResultSize", max_result_size(driver_mem))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -40,27 +40,15 @@ def main() -> None:
     # wrap the three run-to-completion drivers to capture progress
     progress: list[dict] = []
 
-    def _wrap(orig):
-        def run(stream_df, query_name, _orig=orig):
+    def _wrap(mode_of):
+        # mode_of(stream_df) -> the output mode the wrapped runner uses
+        def run(stream_df, query_name):
             q = None
             try:
-                import pyspark.sql.streaming  # noqa: F401
-
                 # re-implement the tiny driver inline so we can read
                 # recentProgress before stop() discards the query handle
-                mode = (
-                    "complete"
-                    if _orig is P.run_to_completion and stream_df.isStreaming
-                    else None
-                )
-                if _orig is P.run_to_completion:
-                    mode = "complete" if stream_df.isStreaming else "append"
-                elif _orig is P.run_append_to_completion:
-                    mode = "append"
-                else:
-                    mode = "update"
                 q = (
-                    stream_df.writeStream.outputMode(mode)
+                    stream_df.writeStream.outputMode(mode_of(stream_df))
                     .format("memory")
                     .queryName(query_name)
                     .start()
@@ -75,14 +63,11 @@ def main() -> None:
 
         return run
 
-    orig = (
-        P.run_to_completion,
-        P.run_append_to_completion,
-        P.run_update_to_completion,
+    P.run_to_completion = _wrap(
+        lambda df: "complete" if df.isStreaming else "append"
     )
-    P.run_to_completion = _wrap(orig[0])
-    P.run_append_to_completion = _wrap(orig[1])
-    P.run_update_to_completion = _wrap(orig[2])
+    P.run_append_to_completion = _wrap(lambda df: "append")
+    P.run_update_to_completion = _wrap(lambda df: "update")
 
     n_events = qmod.load(spark, sf_dir, "events").count()
     names = sorted(n for n in qmod.QUERIES if n.startswith("stream_"))
@@ -101,7 +86,7 @@ def main() -> None:
         durs = sorted(
             p["durationMs"].get("triggerExecution", 0) / 1000.0
             for p in progress
-            if p.get("numInputRows", 0) > 0 or p.get("batchId", 0) >= 0
+            if p.get("numInputRows", 0) > 0
         )
         n_in = sum(p.get("numInputRows", 0) for p in progress)
         out[name] = {

@@ -216,6 +216,124 @@ def test_skipped_scan_joins_only_its_files_deletes(lake):
     assert rows(lake.sql("SELECT id FROM t WHERE id = 200")) == []
 
 
+def _group_jobs(spark, group, fn):
+    """Spark job ids ``fn()`` ran, tagged with job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _live_deletes(lake, name):
+    return lake.catalog.delete_files(lake.catalog.table_id(name))
+
+
+def test_one_row_delete_runs_two_jobs(lake):
+    """A one-row DELETE is one shuffle feeding the delete-file write: a
+    map-stage job and the write job, no checkpoint and no stats job."""
+    lake.sql("CREATE TABLE t(id INTEGER, val VARCHAR)")
+    lake.sql("INSERT INTO t VALUES (1,'a'),(2,'b')")
+    lake.sql("INSERT INTO t VALUES (100,'x'),(200,'y')")
+    lake.sql("DELETE FROM t WHERE id = 200")
+    assert len(_live_deletes(lake, "t")) == 1
+    jobs = _group_jobs(
+        lake.spark, "one-row-delete", lambda: lake.sql("DELETE FROM t WHERE id = 2")
+    )
+    assert 1 <= len(jobs) <= 2
+    assert rows(lake.sql("SELECT id FROM t")) == [(1,), (100,)]
+
+
+def test_second_delete_folds_into_one_delete_file(lake):
+    import pyarrow.parquet as pq
+
+    lake.sql("CREATE TABLE t(id INTEGER, val VARCHAR)")
+    lake.sql("INSERT INTO t VALUES (1,'a'),(2,'b'),(3,'c'),(4,'d')")
+    lake.compact("t", sort_by=["id"])  # ids 1-4 at positions 0-3
+    lake.sql("INSERT INTO t VALUES (100,'x')")
+    lake.sql("DELETE FROM t WHERE id = 2")
+    lake.sql("DELETE FROM t WHERE id = 4")
+    dels = _live_deletes(lake, "t")
+    assert len(dels) == 1
+    d = dels.iloc[0]
+    on_disk = pq.read_table(d["path"]).to_pydict()
+    assert sorted(on_disk["pos"]) == [1, 3]
+    assert int(d["delete_count"]) == 2
+    assert int(d["file_size_bytes"]) > 0
+    stats = lake.catalog.tables["ducklake_table_stats"]
+    assert stats.loc[
+        stats["table_id"] == lake.catalog.table_id("t"), "record_count"
+    ].tolist() == [3]
+    assert rows(lake.sql("SELECT id FROM t")) == [(1,), (3,), (100,)]
+
+
+def test_delete_matching_nothing_leaves_no_trace(lake, tmp_path):
+    import glob
+
+    lake.sql("CREATE TABLE t(id INTEGER, val VARCHAR)")
+    lake.sql("INSERT INTO t VALUES (1,'a'),(2,'b')")
+    snap = lake.catalog.current_snapshot
+    # pruned by file statistics: no file to scan, no Spark job
+    assert _group_jobs(
+        lake.spark, "pruned-delete", lambda: lake.sql("DELETE FROM t WHERE id = 50")
+    ) == []
+    # scanned without a match
+    lake.sql("DELETE FROM t WHERE id % 7 = 5")
+    assert lake.catalog.current_snapshot == snap
+    assert _live_deletes(lake, "t").empty
+    assert glob.glob(str(tmp_path / "data" / "t" / "delete-*")) == []
+    assert rows(lake.sql("SELECT id FROM t")) == [(1,), (2,)]
+
+
+@pytest.mark.parametrize("encrypted", [False, True])
+def test_delete_paths_match_duckdb(spark, duck, tmp_path, encrypted):
+    """DELETE, DELETE … USING, UPDATE and a MATCHED-delete MERGE over
+    files that already carry delete files give DuckDB's rows, on plain
+    and encrypted lakes (DuckDB 1.0 has no MERGE: its twin is the
+    equivalent DELETE … USING)."""
+    lake = DuckLakeSpark(
+        spark=spark,
+        data_path=str(tmp_path / "data"),
+        local_catalog=str(tmp_path / "catalog"),
+        encrypted=encrypted,
+    )
+    duck.execute("DROP TABLE IF EXISTS dm_t")
+    duck.execute("DROP TABLE IF EXISTS dm_k")
+    script = [
+        "CREATE TABLE dm_t(id INTEGER, v INTEGER)",
+        "INSERT INTO dm_t SELECT i, i * 10 FROM range(0, 40) r(i)",
+        "INSERT INTO dm_t SELECT i, i * 10 FROM range(40, 80) r(i)",
+        "CREATE TABLE dm_k(id INTEGER)",
+        "INSERT INTO dm_k VALUES (3), (3), (45), (79)",
+        "DELETE FROM dm_t WHERE id = 5",
+        "DELETE FROM dm_t WHERE id IN (6, 7, 50)",
+        "DELETE FROM dm_t USING dm_k WHERE dm_t.id = dm_k.id",
+        "UPDATE dm_t SET v = v + 1 WHERE id % 4 = 0",
+        (
+            "MERGE INTO dm_t USING (SELECT 8 AS id UNION ALL SELECT 60) s "
+            "ON dm_t.id = s.id WHEN MATCHED THEN DELETE",
+            "DELETE FROM dm_t USING (SELECT 8 AS id UNION ALL SELECT 60) s "
+            "WHERE dm_t.id = s.id",
+        ),
+        "DELETE FROM dm_t WHERE id = 9",
+    ]
+    try:
+        for stmt in script:
+            ours, theirs = stmt if isinstance(stmt, tuple) else (stmt, stmt)
+            lake.sql(ours)
+            duck.execute(theirs)
+            want = sorted(duck.execute("SELECT * FROM dm_t").fetchall())
+            assert rows(lake.sql("SELECT * FROM dm_t")) == want, ours
+    finally:
+        duck.execute("DROP TABLE IF EXISTS dm_t")
+        duck.execute("DROP TABLE IF EXISTS dm_k")
+    # every data file still has at most one live delete file
+    owners = _live_deletes(lake, "dm_t")["data_file_id"]
+    assert owners.is_unique
+
+
 def test_persistence_across_instances(spark, tmp_path):
     lake1 = DuckLakeSpark(
         spark=spark,
@@ -945,6 +1063,39 @@ def test_rename_column_reads_old_files(lake):
     got = sorted(tuple(r) for r in lake.sql("SELECT id, label FROM t").collect())
     assert got == [(1, "a"), (2, "b")]
     assert lake.sql("SELECT * FROM t").columns == ["id", "label"]
+
+
+@pytest.mark.parametrize("inline_limit", [0, 10])
+def test_readded_column_hides_dropped_values(spark, tmp_path, inline_limit):
+    """A column dropped and re-added under the same name is a new column:
+    rows written before it existed read its DEFAULT, or NULL without one
+    — never the dropped column's values; a renamed column and a new
+    column under its old name each read only their own values."""
+    lake = DuckLakeSpark(
+        spark=spark,
+        data_path=str(tmp_path / "data"),
+        local_catalog=str(tmp_path / "catalog"),
+        data_inlining_row_limit=inline_limit,
+    )
+    lake.sql("CREATE TABLE t(id INTEGER, w INTEGER)")
+    lake.sql("INSERT INTO t VALUES (1, 100), (2, 200)")
+    lake.sql("ALTER TABLE t DROP COLUMN w")
+    lake.sql("ALTER TABLE t ADD COLUMN w INTEGER DEFAULT 7")
+    assert rows(lake.sql("SELECT * FROM t")) == [(1, 7), (2, 7)]
+    lake.sql("INSERT INTO t VALUES (3, NULL), (4, 40)")
+    lake.sql("ALTER TABLE t DROP COLUMN w")
+    lake.sql("ALTER TABLE t ADD COLUMN w INTEGER")
+    lake.sql("INSERT INTO t VALUES (5, 50)")
+    assert rows(lake.sql("SELECT * FROM t")) == [
+        (1, None), (2, None), (3, None), (4, None), (5, 50),
+    ]
+    # the renamed-away column and a new namesake each keep their values
+    lake.sql("ALTER TABLE t RENAME COLUMN w TO w2")
+    lake.sql("ALTER TABLE t ADD COLUMN w INTEGER")
+    lake.sql("INSERT INTO t VALUES (6, NULL, 60)")
+    assert rows(lake.sql("SELECT id, w2, w FROM t WHERE id >= 4")) == [
+        (4, None, None), (5, 50, None), (6, None, 60),
+    ]
 
 
 def test_alter_column_type_widening(lake):

@@ -2116,6 +2116,97 @@ def test_prepare_execute(lake):
     assert sorted(rows(lake.sql("SELECT * FROM pe"))) == [(1, "a"), (2, "b")]
 
 
+@pytest.mark.parametrize(
+    "tmpl, args",
+    [
+        ("SELECT '?' AS q, ? AS v", "5"),
+        ("SELECT 'cost $1' AS q, $1 AS v", "7"),
+        ("SELECT $1 AS v", r"'a\1b'"),
+        ("SELECT ? AS a, ? AS b", "'who?', 3"),
+    ],
+)
+def test_execute_binds_only_real_placeholders(lake, tmpl, args):
+    """EXECUTE fills only the template's own ``$N`` / ``?`` placeholders
+    (none inside a literal, none inside an argument) and inserts each
+    argument's text verbatim — DuckDB's rows for the same statements."""
+    import duckdb
+
+    duck = duckdb.connect()
+    lake.sql(f"PREPARE s AS {tmpl}")
+    duck.execute(f"PREPARE s AS {tmpl}")
+    want = sorted(duck.execute(f"EXECUTE s({args})").fetchall())
+    assert rows(lake.sql(f"EXECUTE s({args})")) == want
+
+
+@pytest.mark.parametrize(
+    "ddl, ins",
+    [
+        (
+            'CREATE TABLE q (a INTEGER, "b,c" INTEGER)',
+            "INSERT INTO q VALUES (1, 2), (3, 4)",
+        ),
+        (
+            "CREATE TABLE q (m ENUM('a,b', 'c'))",
+            "INSERT INTO q VALUES ('a,b'), ('c')",
+        ),
+    ],
+)
+def test_column_defs_split_outside_quotes(lake, ddl, ins):
+    """A comma inside a quoted column name or an ENUM value does not
+    split the column list: the table round-trips DuckDB's rows and
+    column names."""
+    import duckdb
+
+    duck = duckdb.connect()
+    for run in (lake.sql, duck.execute):
+        run(ddl)
+        run(ins)
+    got = lake.sql("SELECT * FROM q")
+    want = duck.execute("SELECT * FROM q")
+    assert got.columns == [d[0] for d in want.description]
+    assert rows(got) == sorted(want.fetchall())
+
+
+def test_inline_enum_goes_with_its_table(lake, tmp_path):
+    """An inline ENUM's stored definition belongs to its table: a failed
+    CREATE of an existing table keeps it, CREATE OR REPLACE and DROP
+    remove it, and a reopened lake does not bring it back."""
+
+    def stored():
+        meta = lake.catalog.tables["ducklake_metadata"]
+        return {
+            k: v for k, v in zip(meta["key"], meta["value"])
+            if str(k).startswith(("enum:", "enumcol:"))
+        }
+
+    def ordered():
+        return [r[0] for r in lake.sql("SELECT m FROM q ORDER BY m").collect()]
+
+    lake.sql("CREATE TABLE q (m ENUM('b', 'a'))")
+    lake.sql("INSERT INTO q VALUES ('a'), ('b')")
+    before = stored()
+    assert before == {"enum:q.m": '["b", "a"]', "enumcol:q.m": "q.m"}
+    with pytest.raises(Exception):
+        lake.sql("CREATE TABLE q (m ENUM('x'))")
+    assert stored() == before
+    assert ordered() == ["b", "a"]
+    lake.sql("CREATE OR REPLACE TABLE q (m VARCHAR)")
+    lake.sql("INSERT INTO q VALUES ('b'), ('a')")
+    assert stored() == {}
+    assert ordered() == ["a", "b"]
+    lake.sql("CREATE OR REPLACE TABLE q (m ENUM('b', 'a'))")
+    assert stored() == before
+    lake.sql("DROP TABLE q")
+    assert stored() == {}
+    assert not any(k.startswith("q.") for k in lake._enums)
+    reopened = DuckLakeSpark(
+        spark=lake.spark,
+        data_path=str(tmp_path / "data"),
+        local_catalog=str(tmp_path / "catalog"),
+    )
+    assert not any(k.startswith("q.") for k in reopened._enums)
+
+
 def test_on_conflict_upsert(lake):
     """INSERT … ON CONFLICT (k) DO UPDATE/NOTHING — MERGE-backed upsert."""
     lake.sql(

@@ -58,16 +58,32 @@ _lit = st.text(
 @given(st.lists(_ident, min_size=1, max_size=5))
 def test_split_statements_count(idents):
     """N semicolon-terminated statements split into N statements, and
-    semicolons inside string literals never split."""
-    stmts = [f"SELECT '{i};x' AS c FROM {i}" for i in idents]
+    semicolons inside string literals, quoted identifiers and block
+    comments never split."""
+    stmts = [
+        f"SELECT '{i};x' AS c, \"{i};x\" /* {i}; */ FROM {i}" for i in idents
+    ]
     out = split_statements("; ".join(stmts) + ";")
     assert out == stmts
 
 
-@given(st.lists(_ident, min_size=1, max_size=6))
+@given(
+    st.lists(
+        st.tuples(
+            _ident,
+            st.sampled_from(
+                ["f({p}, {p})", "[{p}, {p}]", "{{'k': {p}, 'j': {p}}}",
+                 '"{p},{p}"']
+            ),
+        ),
+        min_size=1,
+        max_size=6,
+    )
+)
 def test_split_top_level_parens(parts):
-    """Commas inside parens never split; top-level commas always do."""
-    items = [f"f({p}, {p})" for p in parts]
+    """Commas inside parens, brackets, braces and quoted identifiers
+    never split; top-level commas always do."""
+    items = [shape.format(p=p) for p, shape in parts]
     assert split_top_level(", ".join(items)) == items
 
 
@@ -173,6 +189,38 @@ def test_dialect_rewrites_idempotent_on_oracle_corpus():
         once = _dialect_chain(osql)
         twice = _dialect_chain(once)
         assert once == twice, name
+
+
+def test_literal_spans_match_duckdb_tokenizer():
+    """The scanner's '…' spans start exactly at DuckDB's string_const
+    tokens and its "…" spans at DuckDB's quoted identifier tokens
+    (duckdb.tokenize reports byte offsets and skips comments)."""
+    import itertools
+
+    import duckdb
+
+    from ducklakexl_spark.engine import _literal_spans
+
+    for name, osql in _ORACLE_TEXTS:
+        char_at = {
+            b: i
+            for i, b in enumerate(
+                itertools.accumulate(
+                    (len(c.encode()) for c in osql), initial=0
+                )
+            )
+        }
+        toks = [(char_at[b], t) for b, t in duckdb.tokenize(osql)]
+        theirs = {
+            (p, osql[p]) for p, t in toks
+            if t == duckdb.token_type.string_const
+            or (t == duckdb.token_type.identifier and osql[p] == '"')
+        }
+        ours = {
+            (p, osql[p]) for p in _literal_spans(osql).starts
+            if osql[p] in "'\""
+        }
+        assert ours == theirs, name
 
 
 def test_bracket_rewrite_noop_without_brackets():

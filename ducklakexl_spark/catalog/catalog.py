@@ -9,6 +9,11 @@ files — a delete file lists deleted row positions of one data file.
 The reference reaches these tables through DuckDB's ducklake extension
 (ATTACH at ducklakexl.py:236); here they are plain pandas frames with the
 spec schemas, committed atomically through :class:`CatalogStore`.
+
+``tables`` is a :class:`CatalogTables`: every reassignment of a frame
+bumps that table's change number, and every in-place edit here calls
+``tables.touch``.  The store writes and the workbook sync serializes only
+the tables whose numbers moved, so a statement pays for what it changed.
 """
 
 from __future__ import annotations
@@ -20,7 +25,12 @@ import pandas as pd
 
 from ducklakexl_spark import iofs
 from ducklakexl_spark.catalog.schemas import CATALOG_SCHEMAS
-from ducklakexl_spark.catalog.store import CatalogStore, conform, empty_frame
+from ducklakexl_spark.catalog.store import (
+    CatalogStore,
+    CatalogTables,
+    conform,
+    empty_frame,
+)
 
 MAIN_SCHEMA = "main"
 
@@ -40,7 +50,7 @@ class DuckLakeCatalog:
     ):
         self.store = store
         self.data_path = data_path
-        self._txn_backup: dict[str, pd.DataFrame] | None = None
+        self._txn_backup: CatalogTables | None = None
         self._txn_files: list[str] = []
         if store.exists():
             self.tables = store.load()
@@ -51,7 +61,9 @@ class DuckLakeCatalog:
                     "retroactively protected — create a new lake"
                 )
         else:
-            self.tables = {t: empty_frame(t) for t in CATALOG_SCHEMAS}
+            self.tables = CatalogTables(
+                {t: empty_frame(t) for t in CATALOG_SCHEMAS}
+            )
             self._encrypted_bootstrap = bool(encrypted)
             self._bootstrap()
         self._base_snapshot = self.current_snapshot
@@ -88,7 +100,7 @@ class DuckLakeCatalog:
         a partial transaction.  No nesting."""
         if self._txn_backup is not None:
             raise ValueError("already in a transaction")
-        self._txn_backup = {k: v.copy() for k, v in self.tables.items()}
+        self._txn_backup = self.tables.copy()  # frames and change numbers
         self._txn_files = []
 
     def in_txn(self) -> bool:
@@ -154,6 +166,25 @@ class DuckLakeCatalog:
         self.tables[table] = (
             add if cur.empty else pd.concat([cur, add], ignore_index=True)
         )
+
+    def _end_rows(self, table: str, mask, snapshot: int) -> None:
+        """End-snapshot the rows under ``mask`` in place."""
+        if mask.any():
+            self.tables[table].loc[mask, "end_snapshot"] = snapshot
+            self.tables.touch(table)
+
+    def _edit_stats(self, table_id: int, **values) -> bool:
+        """Set ``ducklake_table_stats`` columns of one table in place (a
+        callable value maps the current column slice); False when the
+        table has no stats row."""
+        stats = self.tables["ducklake_table_stats"]
+        mask = stats["table_id"] == table_id
+        if not mask.any():
+            return False
+        for col, v in values.items():
+            stats.loc[mask, col] = v(stats.loc[mask, col]) if callable(v) else v
+        self.tables.touch("ducklake_table_stats")
+        return True
 
     def _bootstrap(self) -> None:
         self._append(
@@ -393,7 +424,7 @@ class DuckLakeCatalog:
         mask = self.live_mask(df) & (df["view_name"] == name)
         if not mask.any():
             raise KeyError(f"view not found: {name}")
-        df.loc[mask, "end_snapshot"] = self.current_snapshot + 1
+        self._end_rows("ducklake_view", mask, self.current_snapshot + 1)
         if _commit:
             next_cat, next_file = self._counters()
             self.commit_snapshot(f'dropped_view:"{name}"', next_cat, next_file)
@@ -418,7 +449,7 @@ class DuckLakeCatalog:
         snapshot = self.current_snapshot + 1
         mask = self.live_mask(df) & (df["table_id"] == table_id)
         old_row = df[mask].iloc[0].to_dict()
-        df.loc[mask, "end_snapshot"] = snapshot
+        self._end_rows("ducklake_table", mask, snapshot)
         old_row.update(
             {"begin_snapshot": snapshot, "end_snapshot": None, "table_name": new}
         )
@@ -490,7 +521,7 @@ class DuckLakeCatalog:
             if df.empty:
                 continue
             mask = self.live_mask(df) & (df["table_id"] == table_id)
-            df.loc[mask, "end_snapshot"] = snapshot
+            self._end_rows(t, mask, snapshot)
         next_cat, next_file = self._counters()
         self.commit_snapshot(f'dropped_table:"{name}"', next_cat, next_file)
 
@@ -558,7 +589,7 @@ class DuckLakeCatalog:
         snapshot = self.current_snapshot + 1
         df = self.tables["ducklake_column"]
         mask = self.live_mask(df) & (df["column_id"] == int(row["column_id"]))
-        df.loc[mask, "end_snapshot"] = snapshot
+        self._end_rows("ducklake_column", mask, snapshot)
         next_cat, next_file = self._counters()
         return self.commit_snapshot(
             f"altered_table:{table_id}:drop_column:{name}", next_cat, next_file
@@ -574,7 +605,7 @@ class DuckLakeCatalog:
         snapshot = self.current_snapshot + 1
         df = self.tables["ducklake_column"]
         mask = self.live_mask(df) & (df["column_id"] == int(row["column_id"]))
-        df.loc[mask, "end_snapshot"] = snapshot
+        self._end_rows("ducklake_column", mask, snapshot)
         new_row = {
             k: (None if pd.isna(v) else v) for k, v in row.to_dict().items()
         }
@@ -662,7 +693,7 @@ class DuckLakeCatalog:
                 self.live_mask(df) & (df["object_id"] == object_id)
                 & (df["key"] == key)
             )
-            df.loc[mask, "end_snapshot"] = snapshot
+            self._end_rows("ducklake_tag", mask, snapshot)
             self._append(
                 "ducklake_tag",
                 [
@@ -681,7 +712,7 @@ class DuckLakeCatalog:
                 self.live_mask(df) & (df["table_id"] == object_id)
                 & (df["column_id"] == column_id) & (df["key"] == key)
             )
-            df.loc[mask, "end_snapshot"] = snapshot
+            self._end_rows("ducklake_column_tag", mask, snapshot)
             self._append(
                 "ducklake_column_tag",
                 [
@@ -744,7 +775,7 @@ class DuckLakeCatalog:
         info = self.tables["ducklake_partition_info"]
         if not info.empty:
             mask = self.live_mask(info) & (info["table_id"] == table_id)
-            info.loc[mask, "end_snapshot"] = snapshot
+            self._end_rows("ducklake_partition_info", mask, snapshot)
         next_cat, next_file = self._counters()
         partition_id = next_cat
         self._append(
@@ -887,13 +918,9 @@ class DuckLakeCatalog:
             if df.empty:
                 continue
             mask = self.live_mask(df) & (df["table_id"] == table_id)
-            df.loc[mask, "end_snapshot"] = snapshot
+            self._end_rows(t, mask, snapshot)
         # reset stats: register_data_files adds on top, so zero them first
-        stats = self.tables["ducklake_table_stats"]
-        mask = stats["table_id"] == table_id
-        if mask.any():
-            stats.loc[mask, "record_count"] = 0
-            stats.loc[mask, "file_size_bytes"] = 0
+        self._edit_stats(table_id, record_count=0, file_size_bytes=0)
         return self.register_data_files(table_id, files, column_stats)
 
     def expire_snapshots(self, before_snapshot: int) -> dict:
@@ -986,17 +1013,12 @@ class DuckLakeCatalog:
     def _bump_table_stats(
         self, table_id: int, added_records: int, next_row_id: int, added_bytes: int
     ) -> None:
-        stats = self.tables["ducklake_table_stats"]
-        mask = stats["table_id"] == table_id
-        if mask.any():
-            stats.loc[mask, "record_count"] = (
-                stats.loc[mask, "record_count"].fillna(0) + added_records
-            )
-            stats.loc[mask, "next_row_id"] = next_row_id
-            stats.loc[mask, "file_size_bytes"] = (
-                stats.loc[mask, "file_size_bytes"].fillna(0) + added_bytes
-            )
-        else:
+        if not self._edit_stats(
+            table_id,
+            record_count=lambda c: c.fillna(0) + added_records,
+            next_row_id=next_row_id,
+            file_size_bytes=lambda c: c.fillna(0) + added_bytes,
+        ):
             self._append(
                 "ducklake_table_stats",
                 [
@@ -1035,7 +1057,7 @@ class DuckLakeCatalog:
                 & (dels["table_id"] == table_id)
                 & (dels["data_file_id"].isin([e["data_file_id"] for e in entries]))
             )
-            dels.loc[mask, "end_snapshot"] = snapshot
+            self._end_rows("ducklake_delete_file", mask, snapshot)
 
         rows = []
         for e in sorted(entries, key=lambda x: x["data_file_id"]):
@@ -1058,12 +1080,9 @@ class DuckLakeCatalog:
             next_file += 1
         self._append("ducklake_delete_file", rows)
 
-        stats = self.tables["ducklake_table_stats"]
-        mask = stats["table_id"] == table_id
-        if mask.any():
-            stats.loc[mask, "record_count"] = (
-                stats.loc[mask, "record_count"] - removed_records
-            )
+        self._edit_stats(
+            table_id, record_count=lambda c: c - removed_records
+        )
         if not commit:
             return None
         return self.commit_snapshot(
@@ -1129,13 +1148,8 @@ class DuckLakeCatalog:
             & (df["row_id"].isin(list(row_ids)))
         )
         n = int(mask.sum())
-        df.loc[mask, "end_snapshot"] = snapshot
-        stats = self.tables["ducklake_table_stats"]
-        smask = stats["table_id"] == table_id
-        if smask.any():
-            stats.loc[smask, "record_count"] = (
-                stats.loc[smask, "record_count"] - n
-            )
+        self._end_rows("ducklake_inlined_data", mask, snapshot)
+        self._edit_stats(table_id, record_count=lambda c: c - n)
         if not commit:
             return None
         next_cat, next_file = self._counters()
@@ -1156,11 +1170,8 @@ class DuckLakeCatalog:
             if df.empty:
                 continue
             mask = self.live_mask(df) & (df["table_id"] == table_id)
-            df.loc[mask, "end_snapshot"] = snapshot
-        stats = self.tables["ducklake_table_stats"]
-        mask = stats["table_id"] == table_id
-        if mask.any():
-            stats.loc[mask, "record_count"] = 0
+            self._end_rows(t, mask, snapshot)
+        self._edit_stats(table_id, record_count=0)
         next_cat, next_file = self._counters()
         return self.commit_snapshot(f"truncated_table:{table_id}", next_cat, next_file)
 

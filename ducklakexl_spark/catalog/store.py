@@ -5,6 +5,17 @@ Mirrors the reference's ``local_catalog`` DuckDB file (ducklakexl.py:20,
 236); the reference's per-table ``BEGIN; TRUNCATE; INSERT; COMMIT``
 refresh (ducklakexl.py:461-464) becomes write-temp-then-rename here.
 
+A save writes only the tables that changed.  The catalog hands the store
+a :class:`CatalogTables`, whose per-table change numbers say which frames
+were reassigned or edited; the store remembers the number and the file
+identity (inode, size, mtime) of every live file it last wrote, linked or
+read.  A table whose number and live file both still match is hard-linked
+from the live directory into the commit directory (copied where links
+fail) instead of re-encoded, so a one-row INSERT writes its 5 touched
+tables and links the other 14.  A file another writer replaced no longer
+matches and is written from memory.  The directory swap is unchanged, and
+the hard links leave no second copy once the old directory is removed.
+
 Catalog tables are tiny (SURVEY §1.2), so they live driver-side as pandas
 DataFrames with pyarrow-enforced schemas — metadata operations never
 launch Spark jobs (BASELINE.md's explicit guidance for the 2x bench
@@ -14,6 +25,7 @@ envelope), and the data plane reads them to resolve file lists.
 from __future__ import annotations
 
 import contextlib
+import itertools
 import os
 import shutil
 import tempfile
@@ -57,12 +69,70 @@ def conform(table: str, df: pd.DataFrame) -> pd.DataFrame:
     return arrow.to_pandas(types_mapper=_types_mapper)
 
 
+_change_numbers = itertools.count(1)
+
+
+class CatalogTables(dict):
+    """Catalog frames by table name, each with a change number.
+
+    Every assignment takes a fresh number from one process-wide counter,
+    and in-place edits call :meth:`touch`, so a number names one content
+    of one table.  The store and the workbook sync compare numbers to
+    skip the tables they already hold.  :meth:`copy` keeps the numbers
+    with copied frames (a transaction's rollback image)."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__()
+        self.versions: dict[str, int] = {}
+        self.update(*args, **kwargs)
+
+    def __setitem__(self, table: str, frame: pd.DataFrame) -> None:
+        super().__setitem__(table, frame)
+        self.touch(table)
+
+    def update(self, *args, **kwargs) -> None:
+        for table, frame in dict(*args, **kwargs).items():
+            self[table] = frame
+
+    def touch(self, table: str) -> None:
+        self.versions[table] = next(_change_numbers)
+
+    def copy(self) -> "CatalogTables":
+        out = CatalogTables()
+        dict.update(out, {t: f.copy() for t, f in self.items()})
+        out.versions = dict(self.versions)
+        return out
+
+
+def _file_key(st: os.stat_result) -> tuple:
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def _write_table(table: str, frame: pd.DataFrame | None, path: str) -> None:
+    schema = CATALOG_SCHEMAS[table]
+    if frame is None:
+        arrow = schema.empty_table()
+    else:
+        try:
+            arrow = pa.Table.from_pandas(
+                frame, schema=schema, preserve_index=False
+            )
+        except KeyError:  # a frame without every schema column
+            arrow = pa.Table.from_pandas(
+                conform(table, frame), schema=schema, preserve_index=False
+            )
+    pq.write_table(arrow, path)
+
+
 class CatalogStore:
     """Directory of parquet files, one per catalog table, swapped atomically."""
 
     def __init__(self, path: str):
         self.path = path
         os.makedirs(path, exist_ok=True)
+        # table -> (change number, _file_key) of the live file this
+        # instance last wrote, linked or read
+        self._live: dict[str, tuple[int, tuple]] = {}
 
     def _file(self, table: str, root: str | None = None) -> str:
         return os.path.join(root or self.path, f"{table}.parquet")
@@ -150,28 +220,59 @@ class CatalogStore:
 
         return int(pc.max(col).as_py())
 
-    def load(self) -> dict[str, pd.DataFrame]:
+    def load(self) -> CatalogTables:
         self._recover()
-        tables = {}
+        tables = CatalogTables()
+        live = {}
         for t in CATALOG_SCHEMAS:
-            f = self._file(t)
-            if os.path.exists(f):
-                tables[t] = pq.read_table(f).to_pandas(types_mapper=_types_mapper)
-            else:
+            try:
+                with open(self._file(t), "rb") as fh:
+                    # identity of the file actually read, even if a
+                    # concurrent save swaps the directory meanwhile
+                    key = _file_key(os.fstat(fh.fileno()))
+                    tables[t] = pq.read_table(fh).to_pandas(
+                        types_mapper=_types_mapper
+                    )
+            except FileNotFoundError:
                 tables[t] = empty_frame(t)
+                continue
+            live[t] = (tables.versions[t], key)
+        self._live = live
         return tables
 
+    def _unchanged(self, table: str, version: int | None) -> bool:
+        """Whether the live file holds ``version`` of ``table``: this
+        instance last wrote, linked or read it at that change number,
+        and no other writer has replaced it since."""
+        rec = self._live.get(table)
+        if version is None or rec is None or rec[0] != version:
+            return False
+        try:
+            return _file_key(os.stat(self._file(table))) == rec[1]
+        except FileNotFoundError:
+            return False
+
     def save(self, tables: dict[str, pd.DataFrame]) -> None:
-        """Atomic commit: write everything to a temp dir, then swap."""
+        """Atomic commit: write the changed tables to a temp dir, link the
+        unchanged ones into it, then swap.  A plain dict (no change
+        numbers) writes every table."""
+        versions = getattr(tables, "versions", {})
         parent = os.path.dirname(os.path.abspath(self.path)) or "."
         tmp = tempfile.mkdtemp(prefix=".catalog_commit_", dir=parent)
+        live = {}
         try:
             for t in CATALOG_SCHEMAS:
-                df = conform(t, tables.get(t, empty_frame(t)))
-                arrow = pa.Table.from_pandas(
-                    df, schema=CATALOG_SCHEMAS[t], preserve_index=False
-                )
-                pq.write_table(arrow, self._file(t, tmp))
+                dst = self._file(t, tmp)
+                v = versions.get(t)
+                if self._unchanged(t, v):
+                    try:
+                        os.link(self._file(t), dst)
+                    except OSError:
+                        shutil.copyfile(self._file(t), dst)
+                else:
+                    _write_table(t, tables.get(t), dst)
+                if v is not None:
+                    live[t] = (v, _file_key(os.stat(dst)))
             # POSIX can't atomically swap two non-empty dirs, so there is
             # an unavoidable instant with the live dir absent.  Order the
             # renames so the previous commit stays recoverable the whole
@@ -189,3 +290,4 @@ class CatalogStore:
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
             raise
+        self._live = live

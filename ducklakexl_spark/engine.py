@@ -3549,8 +3549,6 @@ def rewrite_bracket_syntax(
     return "".join(out)
 
 
-_EQ_ANY_RE = re.compile(r"=\s*(?:ANY|SOME)\s*\(", re.I)
-_NE_ALL_RE = re.compile(r"(?:!=|<>)\s*ALL\s*\(", re.I)
 _FACTORIAL_RE = re.compile(r"\b(\d+)\s*!(?![=~])")
 
 
@@ -4104,13 +4102,37 @@ _COLON_INT_CAST_RE = re.compile(
 )
 
 
+def _name_chain_start(stmt: str, j: int) -> int:
+    """Start of the dotted chain of words, numbers and quoted identifiers
+    ending at ``j`` (``t.v``, ``"t"."v"``, ``t.`v` ``, ``1.5``); ``j + 1``
+    when none ends there."""
+    lex = _literal_spans(stmt)
+    k = j
+    while k >= 0:
+        c = stmt[k]
+        sp = lex.span(k) if c == '"' else None
+        if sp:
+            k = sp[0] - 1
+        elif c == "`":  # Spark-quoted (a `` pair re-enters here)
+            o = stmt.rfind("`", 0, k)
+            if o < 0:
+                break
+            k = o - 1
+        elif c.isalnum() or c in "._":
+            k -= 1
+        else:
+            break
+    return k + 1
+
+
 def rewrite_int_colon_casts(stmt: str) -> str:
     """``x::INTEGER`` → ``CAST(x AS INTEGER)`` for integer targets so
     rewrite_int_cast_rounding sees them — Spark parses ``::`` natively
     but truncates where DuckDB rounds.  Operand backscan covers
     parenthesized groups, string literals, and dotted identifiers /
-    numeric literals; ``::INT[]`` array suffixes are excluded (they
-    belong to rewrite_array_type_suffix)."""
+    numeric literals, and quoted identifiers with their qualifiers;
+    ``::INT[]`` array suffixes are excluded (they belong to
+    rewrite_array_type_suffix)."""
     pos = 0
     while True:
         m = _COLON_INT_CAST_RE.search(stmt, pos)
@@ -4148,10 +4170,7 @@ def rewrite_int_colon_casts(stmt: str) -> str:
             if stmt[w + 1 : e + 1].upper() in ("DATE", "TIMESTAMP", "TIME"):
                 start = w + 1
         else:
-            k = j
-            while k >= 0 and (stmt[k].isalnum() or stmt[k] in "._"):
-                k -= 1
-            start = k + 1
+            start = _name_chain_start(stmt, j)
         if start > j:
             pos = m.end()
             continue
@@ -4700,12 +4719,6 @@ def rewrite_ansi_fetch_and_json_arrow(
     return stmt
 
 
-_TRAILING_KW = frozenset(
-    "from where group order having limit offset window qualify union "
-    "except intersect".split()
-)
-
-
 _TRAILING_COMMA_RE = re.compile(
     r",(?=\s*(?:$|[)\]}]|(?:from|where|group|order|having|limit|offset"
     r"|window|qualify|union|except|intersect)\b))",
@@ -4969,13 +4982,20 @@ def rewrite_similar_to(stmt: str) -> str:
 
 _FDIV_OP_RE = re.compile(r"//|!?~~\*|!?~~|!?~")
 _FDIV_OPS = {"~~*": "ILIKE", "~~": "LIKE", "~": "RLIKE"}
+# keywords after which an expression starts: a ``~`` there is unary
+_OPERAND_KW_RE = re.compile(
+    r"\b(?:and|or|not|select|where|when|then|else|case|on|having|by|is|in"
+    r"|like|between|distinct|all|any|some|return)$",
+    re.I,
+)
 
 
 def rewrite_floor_div(stmt: str) -> str:
     """DuckDB operator spellings → Spark: ``//`` floor division → ``DIV``
     (both truncate toward zero on integers), binary ``~`` / ``!~`` regex
     match → ``RLIKE`` / ``NOT RLIKE`` (unary bitwise ``~`` — no operand
-    on the left — is left alone).  Quote/comment-aware."""
+    on the left, or a keyword such as ``AND`` — is left alone).
+    Quote/comment-aware."""
     if "//" not in stmt and "~" not in stmt:  # no trigger chars at all
         return stmt
     lex = _literal_spans(stmt)
@@ -5006,6 +5026,8 @@ def rewrite_floor_div(stmt: str) -> str:
         if j < 0 or not (
             lex.span(j) or stmt[j].isalnum() or stmt[j] in ")]_"
         ):
+            continue
+        if not lex.span(j) and _OPERAND_KW_RE.search(stmt, 0, j + 1):
             continue
         word = _FDIV_OPS[op.lstrip("!")]
         new = f" {'NOT ' if op[0] == '!' else ''}{word} "
@@ -5234,6 +5256,32 @@ _LIST_FILES_RE = re.compile(
 )
 
 
+def _bq(name: str) -> str:
+    """A backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _type_sql(dt: T.DataType) -> str:
+    """Spark SQL text of a data type, nested field names backtick-quoted."""
+    if isinstance(dt, T.StructType):
+        fields = ", ".join(f"{_bq(f.name)}: {_type_sql(f.dataType)}" for f in dt)
+        return f"STRUCT<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{_type_sql(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{_type_sql(dt.keyType)}, {_type_sql(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def _sql_string(s: str) -> str:
+    """A Spark SQL string expression reading back exactly ``s`` — a plain
+    literal unless ``s`` holds a quote or backslash, which the engine's
+    ``escapedStringLiterals`` lexer cannot carry; those go as hex."""
+    if "'" not in s and "\\" not in s:
+        return f"'{s}'"
+    return f"decode(unhex('{s.encode().hex()}'), 'UTF-8')"
+
+
 def _inline_encode_value(v, dt: T.DataType):
     """JSON-encode one value of Spark type ``dt`` for catalog-inlined
     storage (DuckLake spec "Data Inlining").  Lossless for every type the
@@ -5415,6 +5463,9 @@ class DuckLakeSpark:
         # (pinned by tests — the change-proportional-commit evidence)
         self._last_scan_file_count: int | None = None
         self.last_match_scan_files: int | None = None
+        # the data-file paths the last table_df scan kept after skipping:
+        # a DML statement hands its hit scan's list to _register_deletes
+        self._last_scan_paths: list[str] = []
         # SET VARIABLE name = expr / getvariable('name') user variables
         self.sql_variables: dict[str, object] = {}
         # CREATE TYPE … AS ENUM registry: enum columns store as VARCHAR
@@ -7326,15 +7377,18 @@ class DuckLakeSpark:
             )
             for r in self.catalog.columns(tid).itertuples()
         }
+        # one selectExpr over SQL text: a per-column Column chain costs
+        # several driver↔JVM round trips per F.* call
         aligned = []
         src_fields = df.schema.fields
         n_rows: int | None = None
         n_gen_before = 0  # generated cols never consume a positional slot
         for i, f in enumerate(schema.fields):
+            tsql = _type_sql(f.dataType)
             if f.name in gen_names:
                 # VIRTUAL: stored as NULL placeholder, computed at scan
                 n_gen_before += 1
-                aligned.append(F.lit(None).cast(f.dataType).alias(f.name))
+                aligned.append(f"CAST(NULL AS {tsql}) AS {_bq(f.name)}")
                 continue
             i = i - n_gen_before
             nulls_ok, default = meta.get(f.name, (True, None))
@@ -7344,13 +7398,12 @@ class DuckLakeSpark:
                 else None
             )
             if f.name in df.columns:
-                col = F.col(f.name).cast(f.dataType)
+                col = _bq(f.name)
             elif col_list is None and not by_name and i < len(src_fields):
                 # backtick-quoted — a literal-derived source column can
                 # be named "0.0", which unquoted resolution would parse
                 # as a struct-field access
-                src_name = src_fields[i].name.replace("`", "``")
-                col = F.col(f"`{src_name}`").cast(f.dataType)
+                col = _bq(src_fields[i].name)
             elif seq_m:
                 # DEFAULT nextval('seq'): block-allocate against the
                 # actual row count (one count job, one catalog commit),
@@ -7362,31 +7415,25 @@ class DuckLakeSpark:
                 if n_rows is None:
                     n_rows = df.count()
                 base, inc = self._seq_alloc(seq_m.group(1), n_rows)
-                from pyspark.sql import Window as W
-
-                rn = F.row_number().over(
-                    W.orderBy(F.monotonically_increasing_id())
-                )
                 col = (
-                    F.lit(base) + F.lit(inc) * (rn - F.lit(1))
-                ).cast(f.dataType)
+                    f"({base} + {inc} * (row_number() OVER "
+                    "(ORDER BY monotonically_increasing_id()) - 1))"
+                )
             elif default is not None:
-                col = F.expr(default).cast(f.dataType)
+                col = f"({default})"
             else:
-                col = F.lit(None).cast(f.dataType)
+                col = "NULL"
+            col = f"CAST({col} AS {tsql})"
             if not nulls_ok:
                 # enforced inside the write projection (raise_error is a
                 # row expression) — no extra validation pass over the data
-                col = F.when(
-                    col.isNull(),
-                    F.raise_error(
-                        F.lit(
-                            f"NOT NULL constraint failed: {name}.{f.name}"
-                        )
-                    ).cast(f.dataType),
-                ).otherwise(col)
-            aligned.append(col.alias(f.name))
-        self._write_dataframe(name, df.select(aligned))
+                msg = _sql_string(f"NOT NULL constraint failed: {name}.{f.name}")
+                col = (
+                    f"CASE WHEN {col} IS NULL THEN "
+                    f"CAST(raise_error({msg}) AS {tsql}) ELSE {col} END"
+                )
+            aligned.append(f"{col} AS {_bq(f.name)}")
+        self._write_dataframe(name, df.selectExpr(*aligned))
         return None
 
     def _write_dataframe(self, name: str, df: DataFrame) -> None:
@@ -7567,15 +7614,22 @@ class DuckLakeSpark:
         self, tid: int, schema: T.StructType, snapshot: int | None = None
     ) -> list[tuple[str, str, T.DataType]]:
         """(name, expr, declared type) for the table's generated columns,
-        in schema order — from the MVCC ``generated:<col>`` table tags."""
-        out = []
-        for f in schema.fields:
-            expr = self.catalog.get_tag(
-                tid, f"generated:{f.name}", snapshot=snapshot
-            )
-            if expr is not None:
-                out.append((f.name, expr, f.dataType))
-        return out
+        in schema order — from the MVCC ``generated:<col>`` table tags,
+        read in one pass over the live tags."""
+        tags = self.catalog.live("ducklake_tag", snapshot)
+        if tags.empty:
+            return []
+        tags = tags[
+            (tags["object_id"] == tid) & tags["key"].str.startswith("generated:")
+        ]
+        exprs = {
+            k.split(":", 1)[1]: str(v) for k, v in zip(tags["key"], tags["value"])
+        }
+        return [
+            (f.name, exprs[f.name], f.dataType)
+            for f in schema.fields
+            if f.name in exprs
+        ]
 
     def _apply_generated(
         self,
@@ -8427,6 +8481,7 @@ class DuckLakeSpark:
                 schema = T.StructType(narrowed)
         if files.empty:
             self._last_scan_file_count = 0
+            self._last_scan_paths = []
             df = self.spark.createDataFrame([], schema)
             if with_position:
                 df = df.withColumn("__file", F.lit(None).cast("string")).withColumn(
@@ -8438,6 +8493,7 @@ class DuckLakeSpark:
         if predicates:
             paths = self._skip_files(tid, snapshot, paths, predicates)
             self._last_scan_file_count = len(paths)
+            self._last_scan_paths = paths
             if not paths:
                 df = self.spark.createDataFrame([], schema)
                 if with_position:
@@ -8450,6 +8506,7 @@ class DuckLakeSpark:
                 return self._apply_generated(df, tid, schema, snapshot)
         else:
             self._last_scan_file_count = len(paths)
+            self._last_scan_paths = paths
         dels = self.catalog.delete_files(tid, snapshot)
         if not dels.empty and len(paths) < len(files):
             # only the delete files of the data files left after skipping
@@ -8816,11 +8873,13 @@ class DuckLakeSpark:
             live, sdf, cond, t_alias, s_alias,
             [f.name for f in self.table_schema(name).fields], sdf.columns,
         )
+        scan_paths = None
         if preds:
             # catalog-level file skipping over the source bounds, same
             # as MERGE's match branch: only files whose stats intersect
             # the source key range are listed at all
             pruned = self.table_df(name, with_position=True, predicates=preds)
+            scan_paths = self._last_scan_paths
             for c, op, v in preds:
                 pruned = pruned.filter(
                     F.col(c) >= F.lit(v) if op == ">=" else F.col(c) <= F.lit(v)
@@ -8834,7 +8893,7 @@ class DuckLakeSpark:
             f" FROM __del_t {t_alias} WHERE EXISTS"
             f" (SELECT 1 FROM __del_s {s_alias} WHERE {cond})"
         )
-        self._register_deletes(name, tid, hit_pos, predicates=preds)
+        self._register_deletes(name, tid, hit_pos, paths=scan_paths)
         return None
 
     def _delete(self, name: str, where: str | None) -> None:
@@ -8851,6 +8910,7 @@ class DuckLakeSpark:
             }
             preds = self._conjunct_predicates(where, cols, (name, None))
         live = self.table_df(name, with_position=True, predicates=preds)
+        scan_paths = self._last_scan_paths
         hits = live.filter(where) if where else live
         hit_pos = hits.select(
             F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
@@ -8872,12 +8932,12 @@ class DuckLakeSpark:
             file_hits = hit_pos.filter(F.col("file_path") != marker)
             if inl_ids:
                 self._register_deletes(
-                    name, tid, file_hits, commit=False, predicates=preds
+                    name, tid, file_hits, commit=False, paths=scan_paths
                 )
                 self.catalog.end_inlined_rows(tid, inl_ids, commit=True)
                 return None
             hit_pos = file_hits
-        self._register_deletes(name, tid, hit_pos, predicates=preds)
+        self._register_deletes(name, tid, hit_pos, paths=scan_paths)
         return None
 
     _DELETE_STRUCT = T.StructType(
@@ -8913,7 +8973,7 @@ class DuckLakeSpark:
         tid: int,
         hit_pos: DataFrame,
         commit: bool = True,
-        predicates: list[tuple[str, str, object]] | None = None,
+        paths: list[str] | None = None,
     ) -> bool:
         """Write + register positional delete files for ``hit_pos``
         (DataFrame of file_path, pos against the LIVE scan).  The
@@ -8924,8 +8984,8 @@ class DuckLakeSpark:
         one live delete file.
 
         One shuffle feeds the write.  The new hits and the old delete
-        rows of the data files the hit scan kept (``predicates`` are its
-        file-skipping predicates; None means every file) cluster on
+        rows of the data files the hit scan kept (``paths``, the list its
+        table_df kept after file skipping; None means every file) cluster on
         file_path; positions are deduplicated and the groups without a
         new row dropped inside that clustering; the catalog's counts come
         from the written footers (a file's new rows are its footer count
@@ -8936,11 +8996,10 @@ class DuckLakeSpark:
         from pyspark.sql import Window
 
         files = self.catalog.data_files(tid)
-        paths = list(files["path"])
-        if predicates:
-            paths = self._skip_files(tid, None, paths, predicates)
-            if not paths:
-                return False  # the hit scan read no file
+        if paths is None:
+            paths = list(files["path"])
+        elif not paths:
+            return False  # the hit scan read no file
         # a delete file without an owning data file stays live as it is;
         # only owned ones fold into their file's new delete file, so the
         # owner's old delete_count is exactly what the new file carries over
@@ -9080,11 +9139,12 @@ class DuckLakeSpark:
         }
         if gen_names & set(assignments):
             raise ValueError("cannot UPDATE a generated column")
-        new_rows = hits.select(
+        new_rows = hits.selectExpr(
             *[
-                F.expr(assignments[f.name]).cast(f.dataType).alias(f.name)
+                f"CAST(({assignments[f.name]}) AS {_type_sql(f.dataType)}) "
+                f"AS {_bq(f.name)}"
                 if f.name in assignments
-                else F.col(f.name)
+                else _bq(f.name)
                 for f in schema.fields
             ]
         )
@@ -9249,6 +9309,7 @@ class DuckLakeSpark:
         matched_view = "__merge_t"
         self.last_match_scan_files = None
         preds: list[tuple[str, str, object]] = []
+        match_paths = None  # files the pruned match scan kept
         if matched_cl:
             pruned, preds = self._prune_by_source_bounds(
                 tdf, sdf, cond, t_alias, s_alias, cols, s_cols
@@ -9262,6 +9323,7 @@ class DuckLakeSpark:
                 pruned = self.table_df(
                     name, with_position=True, predicates=preds
                 )
+                match_paths = self._last_scan_paths
                 self.last_match_scan_files = self._last_scan_file_count
                 for c, op, v in preds:
                     pruned = pruned.filter(
@@ -9443,7 +9505,7 @@ class DuckLakeSpark:
             # files left by the source-bound predicates.
             self._register_deletes(
                 name, tid, del_pos, commit=(n_new == 0),
-                predicates=None if bysrc_cl else preds,
+                paths=None if bysrc_cl else match_paths,
             )
         if n_new > 0:
             self._write_dataframe(name, new_rows)

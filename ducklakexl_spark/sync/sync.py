@@ -6,13 +6,16 @@ sheet per catalog table (names per the 31-char stripping rule); if ALL
 sheets already existed → pull (adopt remote state); else → push (project
 local state out).
 
-Push is changed-tables-only: every push fingerprints each table's
-serialized payload and rewrites only sheets whose payload differs from
-the last synchronized state — the reference's README lists exactly this
-delta-push as its planned optimization (README.md:160-163; its current
-code clears+rewrites all ~19 sheets per statement).  A typical DML
-statement touches 4-6 catalog tables, so this drops the per-statement
-HTTP round-trips by ~3x on the OneDrive backend.
+Push is changed-tables-only — the delta-push the reference's README
+plans (README.md:160-163; its code clears and rewrites all ~19 sheets per
+statement).  The catalog's :class:`CatalogTables` numbers every change
+to a table, and push serializes and fingerprints only the tables whose
+number moved since it last pushed or adopted them.  Of those, it
+rewrites only the sheets whose payload differs from the last synchronized
+state.  A statement that changed nothing, any read, returns before
+serializing a table or reading the remote snapshot sheet.  A typical DML
+statement touches 4-6 catalog tables, so this also drops the
+per-statement HTTP round-trips by ~3x on the OneDrive backend.
 
 Pull is changed-workbook-only: it reads every sheet (one fan-out) and
 fingerprints each raw payload the same way.  When every non-empty sheet
@@ -79,6 +82,8 @@ class WorkbookSync:
         # table -> fingerprint of the payload last known to be on the
         # remote sheet (written by us, or adopted by a pull)
         self._synced: dict[str, str] = {}
+        # table -> catalog change number whose payload _synced holds
+        self._pushed: dict[str, int] = {}
         self.check_remote = check_remote
         # remote snapshot id observed at last pull/push (None = unknown)
         self._remote_snapshot: int | None = None
@@ -119,6 +124,8 @@ class WorkbookSync:
         if snap is None or snap.empty:
             return False
         catalog.tables.update(new_tables)
+        for t in self._sheet_for:  # the adopted state is a new catalog state
+            catalog.tables.touch(t)
         with catalog.store.commit_lock():
             catalog.store.save(catalog.tables)
         # keep the LOCAL store's optimistic-concurrency baseline in sync
@@ -132,28 +139,36 @@ class WorkbookSync:
             self._synced[t] = _fingerprint(
                 *push_serialize(t, catalog.tables[t])
             )
-        self._remote_snapshot = _max_snapshot(
-            *push_serialize("ducklake_snapshot", catalog.tables["ducklake_snapshot"])
-        )
+        self._pushed = dict(catalog.tables.versions)
+        self._remote_snapshot = catalog.current_snapshot
         return True
 
     def push(self, catalog: DuckLakeCatalog, force: bool = False) -> int:
-        """Catalog → workbook: serialize every table, clear+rewrite the
-        sheets whose payload CHANGED since the last sync (``force=True``
-        rewrites all — used when remote state is unknown).  Concurrent
-        fan-out via ``write_sheets`` when the backend has it (the
-        reference's _session_push_all, ducklakexl.py:539-550).  Returns
-        the number of sheets written.  Inside an open transaction nothing
-        is written: the COMMIT or ROLLBACK statement publishes."""
+        """Catalog → workbook: serialize the tables changed since the last
+        push or adopting pull, clear+rewrite the sheets whose payload
+        differs from the last sync (``force=True`` serializes and rewrites
+        all — used when remote state is unknown).  Concurrent fan-out via
+        ``write_sheets`` when the backend has it (the reference's
+        _session_push_all, ducklakexl.py:539-550).  Returns the number of
+        sheets written.  Inside an open transaction nothing is written:
+        the COMMIT or ROLLBACK statement publishes."""
         if catalog.in_txn():
             return 0
+        versions = catalog.tables.versions
+        changed = [
+            t for t in self._sheet_for
+            if force or self._pushed.get(t) != versions.get(t)
+        ]
+        if not changed:
+            return 0
         dirty = []
-        for t, sheet in self._sheet_for.items():
+        for t in changed:
             header, rows = push_serialize(t, catalog.tables[t])
             fp = _fingerprint(header, rows)
             if force or self._synced.get(t) != fp:
-                dirty.append((t, sheet, header, rows, fp))
+                dirty.append((t, self._sheet_for[t], header, rows, fp))
         if not dirty:
+            self._pushed.update((t, versions.get(t)) for t in changed)
             return 0
         if self.check_remote and self._remote_snapshot is not None:
             # workbook-plane optimistic concurrency: one extra sheet
@@ -181,9 +196,6 @@ class WorkbookSync:
                 self.workbook.write_sheet(sheet, header, rows)
         for t, _sheet, _h, _r, fp in dirty:
             self._synced[t] = fp
-        self._remote_snapshot = _max_snapshot(
-            *push_serialize(
-                "ducklake_snapshot", catalog.tables["ducklake_snapshot"]
-            )
-        )
+        self._pushed.update((t, versions.get(t)) for t in changed)
+        self._remote_snapshot = catalog.current_snapshot
         return len(dirty)

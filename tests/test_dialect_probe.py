@@ -365,6 +365,14 @@ PROBES = [
     ("double_quoted_identifiers",
      'SELECT "n_name", upper("n_name") AS "Shouted Name" FROM nation '
      'ORDER BY "n_name" LIMIT 2'),
+    # a ~ after a keyword is unary bitwise NOT, not a regex match
+    ("unary_tilde_after_keyword",
+     "SELECT true AND ~5 = -6 AS a, CASE WHEN ~1 = -2 THEN ~3 END AS b"),
+    # ::INTEGER on a quoted identifier rounds like the bare form
+    ("quoted_ident_int_colon_cast",
+     'SELECT "v"::INTEGER AS q, v::INTEGER AS b, t."v"::BIGINT AS t '
+     "FROM (SELECT 2.7::DOUBLE AS v UNION ALL SELECT -1.6 "
+     "UNION ALL SELECT 3.2) t"),
 ]
 
 

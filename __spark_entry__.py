@@ -54,13 +54,12 @@ def _cost_tier(name: str) -> int:
 # sim_ivf_topk, dedup_minhash_lsh), ordered cheap-first.  Everything
 # after slot 50 keeps the old tier-then-name order.
 _CURATED_FIRST = [
-    # The r8 representation canaries (queries/canaries.py) answered
-    # their question — the driver's value hash floats one side's
-    # decimals, so no decimal may reach an output column (policy
-    # enforced by tests/test_round8_fixes.py) — and are retired from
-    # the scored window per VERDICT-r8 task 3; the displaced family
-    # representatives (dedup_exact, sim_lsh_buckets) return to their
-    # slots.  The canaries stay in the registry tail.
+    # The representation canaries answered their question — the
+    # scorer's value hash floats one side's decimals, so no decimal may
+    # reach an output column (policy enforced by
+    # tests/test_round8_fixes.py) — and are gone from the registry; the
+    # family representatives they displaced (dedup_exact,
+    # sim_lsh_buckets) hold their slots.
     "dedup_exact", "sim_lsh_buckets",
     # tier-0 scalar/relational singles
     "scalar_misc_funcs", "math_funcs", "string_funcs", "date_funcs",

@@ -30,6 +30,7 @@ from ducklakexl_spark.catalog.store import (
     CatalogTables,
     conform,
     empty_frame,
+    read_manifest,
 )
 
 MAIN_SCHEMA = "main"
@@ -52,7 +53,21 @@ class DuckLakeCatalog:
         self.data_path = data_path
         self._txn_backup: CatalogTables | None = None
         self._txn_files: list[str] = []
-        if store.exists():
+        created = False
+        if not store.exists():
+            if read_manifest(store.path + ".old") is not None:
+                raise RuntimeError(
+                    f"catalog store {store.path!r} is empty but "
+                    f"{store.path}.old holds a catalog: an interrupted "
+                    "commit of an earlier version left it there.  Move its "
+                    "files back into the store directory to open it."
+                )
+            with store.commit_lock():
+                # another engine may have created the catalog meanwhile
+                if not store.exists():
+                    self._bootstrap(encrypted)
+                    created = True
+        if not created:
             self.tables = store.load()
             if encrypted and not self.encrypted:
                 raise ValueError(
@@ -60,12 +75,6 @@ class DuckLakeCatalog:
                     "unencrypted; already-written plain files cannot be "
                     "retroactively protected — create a new lake"
                 )
-        else:
-            self.tables = CatalogTables(
-                {t: empty_frame(t) for t in CATALOG_SCHEMAS}
-            )
-            self._encrypted_bootstrap = bool(encrypted)
-            self._bootstrap()
         self._base_snapshot = self.current_snapshot
 
     @property
@@ -107,7 +116,7 @@ class DuckLakeCatalog:
         return self._txn_backup is not None
 
     def commit_txn(self) -> None:
-        """Persist everything since BEGIN in one atomic store swap."""
+        """Persist everything since BEGIN in one atomic store commit."""
         if self._txn_backup is None:
             return  # autocommit mode: COMMIT is a no-op
         self._txn_backup = None
@@ -137,8 +146,8 @@ class DuckLakeCatalog:
     def _checked_save(self) -> None:
         """Optimistic concurrency: refuse to clobber a commit another
         writer landed since this instance last synchronized.  The check
-        reads one column of one small parquet; the save itself is the
-        atomic directory swap.  (Single-writer-at-a-time per store —
+        reads one column of one small parquet; the save commits with one
+        atomic manifest replace.  (Single-writer-at-a-time per store —
         the same model DuckLake gets from its catalog database's
         transactions; a loser refresh()es and retries.)  The store's
         commit_lock makes the check-then-save pair atomic — without it
@@ -186,7 +195,12 @@ class DuckLakeCatalog:
         self.tables.touch("ducklake_table_stats")
         return True
 
-    def _bootstrap(self) -> None:
+    def _bootstrap(self, encrypted: bool) -> None:
+        """Create and save an empty catalog; the caller holds the commit
+        lock."""
+        self.tables = CatalogTables(
+            {t: empty_frame(t) for t in CATALOG_SCHEMAS}
+        )
         self._append(
             "ducklake_metadata",
             [
@@ -195,11 +209,7 @@ class DuckLakeCatalog:
                 {"key": "data_path", "value": self.data_path},
                 {
                     "key": "encrypted",
-                    "value": (
-                        "true"
-                        if getattr(self, "_encrypted_bootstrap", False)
-                        else "false"
-                    ),
+                    "value": "true" if encrypted else "false",
                 },
             ],
         )

@@ -1,20 +1,23 @@
-"""Local catalog store: one parquet file per catalog table under a
-directory, with atomic swap on commit.
+"""Local catalog store: a directory of immutable parquet files, one live
+version per catalog table, named by ``manifest.json``.
 
 Mirrors the reference's ``local_catalog`` DuckDB file (ducklakexl.py:20,
 236); the reference's per-table ``BEGIN; TRUNCATE; INSERT; COMMIT``
-refresh (ducklakexl.py:461-464) becomes write-temp-then-rename here.
+refresh (ducklakexl.py:461-464) becomes write-new-files, then publish the
+manifest with one ``os.replace`` here.  A reader sees the manifest before
+or after a commit, never a mix, and every file a manifest names stays
+unchanged until a newer manifest drops it.
 
 A save writes only the tables that changed.  The catalog hands the store
 a :class:`CatalogTables`, whose per-table change numbers say which frames
-were reassigned or edited; the store remembers the number and the file
-identity (inode, size, mtime) of every live file it last wrote, linked or
-read.  A table whose number and live file both still match is hard-linked
-from the live directory into the commit directory (copied where links
-fail) instead of re-encoded, so a one-row INSERT writes its 5 touched
-tables and links the other 14.  A file another writer replaced no longer
-matches and is written from memory.  The directory swap is unchanged, and
-the hard links leave no second copy once the old directory is removed.
+were reassigned or edited; the store remembers the change number of every
+live file it last wrote or read.  A table whose number matches the file
+the current manifest names keeps that file, so a one-row INSERT writes
+its 5 touched tables and names the other 14 again.  A file another writer
+replaced is no longer in the manifest, and the table is written from
+memory.  After the replace the commit deletes every parquet file the
+manifest no longer names: superseded versions and a crashed commit's
+leftovers.
 
 Catalog tables are tiny (SURVEY §1.2), so they live driver-side as pandas
 DataFrames with pyarrow-enforced schemas — metadata operations never
@@ -26,13 +29,14 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import json
 import os
-import shutil
-import tempfile
 import time
+import uuid
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from ducklakexl_spark.catalog.schemas import CATALOG_SCHEMAS
@@ -104,10 +108,6 @@ class CatalogTables(dict):
         return out
 
 
-def _file_key(st: os.stat_result) -> tuple:
-    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
-
-
 def _write_table(table: str, frame: pd.DataFrame | None, path: str) -> None:
     schema = CATALOG_SCHEMAS[table]
     if frame is None:
@@ -124,36 +124,60 @@ def _write_table(table: str, frame: pd.DataFrame | None, path: str) -> None:
     pq.write_table(arrow, path)
 
 
+MANIFEST = "manifest.json"
+
+
+def read_manifest(root: str) -> dict[str, str] | None:
+    """Table -> live file name of the store at ``root``, or None when it
+    holds no catalog.  A store written before manifests existed holds one
+    ``<table>.parquet`` per table and reads as the manifest naming them;
+    its first commit writes a real one."""
+    path = os.path.join(root, MANIFEST)
+    while True:
+        try:
+            with open(path) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            pass
+        legacy = {
+            t: f"{t}.parquet"
+            for t in CATALOG_SCHEMAS
+            if os.path.exists(os.path.join(root, f"{t}.parquet"))
+        }
+        # no legacy files: none ever existed, or the converting commit
+        # deleted them after it published a manifest
+        if legacy or not os.path.exists(path):
+            return legacy or None
+
+
 class CatalogStore:
-    """Directory of parquet files, one per catalog table, swapped atomically."""
+    """Directory of immutable parquet files, one live version per catalog
+    table, named by ``manifest.json``; replacing the manifest commits."""
 
     def __init__(self, path: str):
         self.path = path
         os.makedirs(path, exist_ok=True)
-        # table -> (change number, _file_key) of the live file this
-        # instance last wrote, linked or read
-        self._live: dict[str, tuple[int, tuple]] = {}
+        # file name -> change number of the table version it holds, for
+        # the live files this instance last wrote or read
+        self._live: dict[str, int] = {}
 
-    def _file(self, table: str, root: str | None = None) -> str:
-        return os.path.join(root or self.path, f"{table}.parquet")
+    def _file(self, name: str) -> str:
+        return os.path.join(self.path, name)
 
-    def _recover(self) -> None:
-        """Heal the crash window in save(): if a commit died between
-        renaming the live dir to ``.old`` and renaming the new dir into
-        place, the live dir is empty/absent while the backup holds the
-        last durable catalog.  Restoring it here means a restart can
-        never silently bootstrap a fresh catalog over existing data."""
-        backup = self.path + ".old"
-        primary_has = any(
-            os.path.exists(self._file(t)) for t in CATALOG_SCHEMAS
-        )
-        backup_has = os.path.isdir(backup) and any(
-            os.path.exists(self._file(t, backup)) for t in CATALOG_SCHEMAS
-        )
-        if not primary_has and backup_has:
-            if os.path.isdir(self.path):
-                os.rmdir(self.path)  # empty dir from __init__'s makedirs
-            os.rename(backup, self.path)
+    def _consistent(self, read):
+        """``(files, read(files))`` for one committed state.  A file a
+        manifest names is deleted only after a newer manifest replaced
+        it, so a missing file re-reads the manifest and retries; under an
+        unchanged manifest it is an error."""
+        files = read_manifest(self.path) or {}
+        while True:
+            try:
+                return files, read(files)
+            except FileNotFoundError:
+                again = read_manifest(self.path) or {}
+                if again == files:
+                    raise
+                files = again
 
     @contextlib.contextmanager
     def commit_lock(self, timeout: float = 30.0):
@@ -161,8 +185,10 @@ class CatalogStore:
 
         peek_snapshot() → save() is check-then-act; without a lock, two
         writers at the same base snapshot can interleave between the
-        check and the rename and BOTH succeed — one commit silently
-        lost (found by tests/fuzz_concurrency.py with real threads).
+        check and the manifest replace and BOTH succeed — one commit
+        silently lost (found by tests/fuzz_concurrency.py with real
+        threads).  Every save runs under it, so no commit deletes the
+        files of another that is still being written.
         An O_EXCL lockfile serializes the critical section across
         processes and threads on the same store; a lock older than
         ``timeout`` is presumed crashed and broken.  Contention is
@@ -200,94 +226,64 @@ class CatalogStore:
                 pass
 
     def exists(self) -> bool:
-        self._recover()
-        return any(
-            os.path.exists(self._file(t)) for t in CATALOG_SCHEMAS
-        )
+        return read_manifest(self.path) is not None
 
     def peek_snapshot(self) -> int | None:
         """The on-disk catalog's latest snapshot id without loading the
         whole catalog — one column of one small parquet.  Used for
         optimistic-concurrency checks before a save."""
-        self._recover()
-        f = self._file("ducklake_snapshot")
-        if not os.path.exists(f):
-            return None
-        col = pq.read_table(f, columns=["snapshot_id"])["snapshot_id"]
-        if col.length() == 0:
-            return None
-        import pyarrow.compute as pc
 
-        return int(pc.max(col).as_py())
+        def read(files):
+            name = files.get("ducklake_snapshot")
+            if name is None:
+                return None
+            return pq.read_table(self._file(name), columns=["snapshot_id"])
+
+        _, snap = self._consistent(read)
+        if snap is None or snap.num_rows == 0:
+            return None
+        return int(pc.max(snap["snapshot_id"]).as_py())
 
     def load(self) -> CatalogTables:
-        self._recover()
-        tables = CatalogTables()
-        live = {}
-        for t in CATALOG_SCHEMAS:
-            try:
-                with open(self._file(t), "rb") as fh:
-                    # identity of the file actually read, even if a
-                    # concurrent save swaps the directory meanwhile
-                    key = _file_key(os.fstat(fh.fileno()))
-                    tables[t] = pq.read_table(fh).to_pandas(
+        def read(files):
+            tables = CatalogTables()
+            for t in CATALOG_SCHEMAS:
+                tables[t] = (
+                    pq.read_table(self._file(files[t])).to_pandas(
                         types_mapper=_types_mapper
                     )
-            except FileNotFoundError:
-                tables[t] = empty_frame(t)
-                continue
-            live[t] = (tables.versions[t], key)
-        self._live = live
+                    if t in files
+                    else empty_frame(t)
+                )
+            return tables
+
+        files, tables = self._consistent(read)
+        self._live = {name: tables.versions[t] for t, name in files.items()}
         return tables
 
-    def _unchanged(self, table: str, version: int | None) -> bool:
-        """Whether the live file holds ``version`` of ``table``: this
-        instance last wrote, linked or read it at that change number,
-        and no other writer has replaced it since."""
-        rec = self._live.get(table)
-        if version is None or rec is None or rec[0] != version:
-            return False
-        try:
-            return _file_key(os.stat(self._file(table))) == rec[1]
-        except FileNotFoundError:
-            return False
-
     def save(self, tables: dict[str, pd.DataFrame]) -> None:
-        """Atomic commit: write the changed tables to a temp dir, link the
-        unchanged ones into it, then swap.  A plain dict (no change
-        numbers) writes every table."""
+        """Commit ``tables``; the caller holds :meth:`commit_lock`.  A
+        table still at the change number of the file the manifest names
+        keeps that file; a plain dict (no change numbers) writes every
+        table."""
         versions = getattr(tables, "versions", {})
-        parent = os.path.dirname(os.path.abspath(self.path)) or "."
-        tmp = tempfile.mkdtemp(prefix=".catalog_commit_", dir=parent)
-        live = {}
-        try:
-            for t in CATALOG_SCHEMAS:
-                dst = self._file(t, tmp)
-                v = versions.get(t)
-                if self._unchanged(t, v):
-                    try:
-                        os.link(self._file(t), dst)
-                    except OSError:
-                        shutil.copyfile(self._file(t), dst)
-                else:
-                    _write_table(t, tables.get(t), dst)
-                if v is not None:
-                    live[t] = (v, _file_key(os.stat(dst)))
-            # POSIX can't atomically swap two non-empty dirs, so there is
-            # an unavoidable instant with the live dir absent.  Order the
-            # renames so the previous commit stays recoverable the whole
-            # time (backup removed only after the new dir is in place) and
-            # pair with _recover() on every read path.
-            backup = self.path + ".old"
-            if os.path.exists(backup):
-                shutil.rmtree(backup)
-            if os.path.exists(self.path):
-                os.rename(self.path, backup)
-            os.rename(tmp, self.path)
-            if os.path.exists(backup):
-                shutil.rmtree(backup)
-        except Exception:
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            raise
+        current = read_manifest(self.path) or {}
+        files, live = {}, {}
+        for t in CATALOG_SCHEMAS:
+            v, name = versions.get(t), current.get(t)
+            if v is None or self._live.get(name) != v:
+                name = f"{t}-{uuid.uuid4().hex}.parquet"
+                _write_table(t, tables.get(t), self._file(name))
+            files[t] = name
+            if v is not None:
+                live[name] = v
+        tmp = self._file(MANIFEST + ".tmp")
+        with open(tmp, "w") as fh:
+            json.dump(files, fh, indent=1)
+        os.replace(tmp, self._file(MANIFEST))
         self._live = live
+        named = set(files.values())
+        for name in os.listdir(self.path):
+            if name.endswith(".parquet") and name not in named:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(self._file(name))

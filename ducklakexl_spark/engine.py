@@ -37,6 +37,7 @@ import uuid
 
 import pandas as pd
 import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -762,6 +763,34 @@ def sql_identifiers(stmt: str) -> set[str]:
         if stmt[s] == '"':
             ids.add(_quoted_body(stmt[s : e + 1])[0].replace('""', '"'))
     return ids
+
+
+# the session temp views a lake registered for one of its tables or
+# views, by name, with the DataFrame it registered: lakes on one
+# SparkSession share its temp views
+_LAKE_VIEWS: dict[str, DataFrame] = {}
+
+
+def _register_lake_view(name: str, df: DataFrame) -> None:
+    df.createOrReplaceTempView(name)
+    _LAKE_VIEWS[name] = df
+
+
+def _drop_stale_lake_views(
+    spark: SparkSession, idents: set[str], fresh: set[str]
+) -> None:
+    """Drop the lake views a statement names but did not just register:
+    another lake's table, or this lake's dropped or renamed one, must not
+    answer for a name the statement's lake does not hold.  A view that
+    other code registered under the name since is left alone."""
+    for name in (idents & _LAKE_VIEWS.keys()) - fresh:
+        df = _LAKE_VIEWS.pop(name, None)
+        try:
+            ours = df is not None and spark.table(name).sameSemantics(df)
+        except AnalysisException:  # no such view in this session
+            continue
+        if ours:
+            spark.catalog.dropTempView(name)
 
 
 _DISTINCT_ON_RE = re.compile(r"^(\s*SELECT)\s+DISTINCT\s+ON\s*\(", re.I)
@@ -10406,9 +10435,10 @@ class DuckLakeSpark:
             # probe references are registered first (idempotent; the
             # main path re-registers them later anyway)
             idents = sql_identifiers(from_text)
-            for tname in self.catalog.table_names():
-                if tname in idents:
-                    self.table_df(tname).createOrReplaceTempView(tname)
+            fresh = set(self.catalog.table_names()) & idents
+            for tname in fresh:
+                _register_lake_view(tname, self.table_df(tname))
+            _drop_stale_lake_views(self.spark, idents, fresh)
             cols = self.spark.sql(
                 f"SELECT * FROM {from_text} LIMIT 0"
             ).columns
@@ -10963,21 +10993,25 @@ class DuckLakeSpark:
         for cname in CATALOG_SCHEMAS:
             if cname in idents:
                 self._catalog_table_df(cname).createOrReplaceTempView(cname)
+        fresh = set()
         for tname in self.catalog.table_names():
             if tname in idents:
                 preds = self._extract_scan_predicates(stmt, tname)
                 cols = self._extract_scan_columns(stmt, idents, tname)
-                self.table_df(
-                    tname, predicates=preds, columns=cols
-                ).createOrReplaceTempView(tname)
+                _register_lake_view(
+                    tname, self.table_df(tname, predicates=preds, columns=cols)
+                )
+                fresh.add(tname)
         for vname in self.catalog.view_names():
             if vname in idents:
                 # re-resolve the stored SQL at the current snapshot
                 # (recursive: views over views/tables; _select_statement
                 # so PIVOT/UNPIVOT statement-form views resolve too)
-                self._select_statement(
-                    self.catalog.view_sql(vname)
-                ).createOrReplaceTempView(vname)
+                _register_lake_view(
+                    vname, self._select_statement(self.catalog.view_sql(vname))
+                )
+                fresh.add(vname)
+        _drop_stale_lake_views(self.spark, idents, fresh)
         # DuckDB percentage LIMIT (``LIMIT 40%``): strip the clause,
         # size it from the result's row count (truncating, DuckDB
         # semantics: LIMIT 30% of 5 rows → 1), re-apply as .limit() —

@@ -253,7 +253,6 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
 def load_all() -> None:
     """Import every query module so registration side-effects run."""
     from ducklakexl_spark.queries import (  # noqa: F401
-        canaries,
         dedup,
         drift,
         entity,

@@ -33,6 +33,34 @@ def max_result_size(driver_mem: str) -> str:
     return f"{max(1, min(int(mib) // 2, 8 * 1024))}m"
 
 
+def memory_limit(cgroup_max: str = "/sys/fs/cgroup/memory.max") -> int:
+    """Bytes of memory this process may use: the cgroup v2 limit when one
+    is set and below the host's physical memory, else that memory."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open(cgroup_max) as fh:
+            return min(total, int(fh.read().strip()))
+    except (OSError, ValueError):  # no cgroup v2 limit file, or "max"
+        return total
+
+
+def default_driver_mem(limit_bytes: int) -> str:
+    """The driver heap for a process limited to ``limit_bytes``: half of
+    it, at least 512m and at most 48g."""
+    mib = limit_bytes // (2 * 1024 * 1024)
+    return f"{max(512, min(mib, 48 * 1024))}m"
+
+
+def driver_memory(extra_conf: dict[str, str] | None = None) -> str:
+    """``spark.driver.memory`` from ``extra_conf``, else from
+    ``SPARK_GRAFT_DRIVER_MEM``, else sized from this process's memory."""
+    return (
+        (extra_conf or {}).get("spark.driver.memory")
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_mem(memory_limit())
+    )
+
+
 def get_spark(
     app_name: str = "ducklakexl_spark",
     master: str | None = None,
@@ -43,9 +71,7 @@ def get_spark(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    driver_mem = (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    )
+    driver_mem = driver_memory(extra_conf)
 
     builder = (
         SparkSession.builder.master(master)

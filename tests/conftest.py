@@ -7,8 +7,8 @@ import pytest
 
 os.environ.setdefault("TZ", "UTC")
 # the suite's data is sf0.001-sf0.01: a 4 GiB driver heap is ample, and
-# get_spark's 48g default lets the test JVM grow past 10 GiB of RSS,
-# which a host with less memory answers by OOM-killing it mid-run
+# get_spark's default (half the process's memory) would let the test JVM
+# grow into memory that other processes on the host need
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

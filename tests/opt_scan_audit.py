@@ -10,7 +10,7 @@ count, from the formatted explain:
 
 The theoretical floor for most queries is one scan per distinct input
 table; rows are sorted by excess scans so the worst replay offenders
-surface first.  Explain-only: cheap enough to run over all 258 queries.
+surface first.  Explain-only: cheap enough to run over all 256 queries.
 
 Usage: python tests/opt_scan_audit.py [name ...]  (default: all pure)
 """

@@ -6,13 +6,14 @@ point read."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow as pa
 import pytest
 
 from ducklakexl_spark.catalog.schemas import CATALOG_SCHEMAS, sheet_name
-from ducklakexl_spark.catalog.store import CatalogStore
+from ducklakexl_spark.catalog.store import MANIFEST, CatalogStore
 from ducklakexl_spark.engine import DuckLakeSpark
 from ducklakexl_spark.sync import sync as sync_mod
 from ducklakexl_spark.sync.coercions import push_serialize
@@ -25,11 +26,9 @@ def _arrow(table, frame):
     )
 
 
-def _live_inodes(cat_dir):
-    return {
-        t: os.stat(os.path.join(cat_dir, f"{t}.parquet")).st_ino
-        for t in CATALOG_SCHEMAS
-    }
+def _live_files(cat_dir):
+    with open(os.path.join(cat_dir, MANIFEST)) as fh:
+        return json.load(fh)
 
 
 class _Calls:
@@ -140,11 +139,11 @@ def test_store_and_sheets_match_catalog_after_every_statement(
     assert (calls.serialized, calls.saves) == before
 
     # an INSERT's commit replaces exactly the files of the tables it
-    # changed; the other catalog files stay the same inode (linked)
-    inodes = _live_inodes(cat_dir)
+    # changed; the manifest names the other catalog files again
+    files = _live_files(cat_dir)
     run("INSERT INTO t VALUES (40, 'ins', 4)")
-    after = _live_inodes(cat_dir)
-    assert sorted(t for t in CATALOG_SCHEMAS if after[t] != inodes[t]) == [
+    after = _live_files(cat_dir)
+    assert sorted(t for t in CATALOG_SCHEMAS if after[t] != files[t]) == [
         "ducklake_data_file",
         "ducklake_file_column_statistics",
         "ducklake_snapshot",
@@ -167,9 +166,9 @@ def test_store_and_sheets_match_catalog_after_every_statement(
 
 
 def test_store_save_rewrites_a_table_another_writer_replaced(tmp_path):
-    """The store links a table only while the live file is the one it
-    last wrote or read; a file another store instance replaced is
-    written again from memory."""
+    """The store keeps a table's file only while the manifest names the
+    file it last wrote or read; a file another store instance replaced
+    is written again from memory."""
     from ducklakexl_spark.catalog import DuckLakeCatalog
 
     path = str(tmp_path / "cat")

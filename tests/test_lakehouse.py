@@ -994,29 +994,39 @@ def test_truncate_and_drop_feed_gc_queue(lake):
     assert removed == len(q2)
 
 
-def test_catalog_store_crash_window_recovery(spark, tmp_path):
-    """Simulate a crash between save()'s two renames: the live dir is
-    gone but .old holds the last commit — the next load must recover it,
-    not bootstrap an empty catalog over existing data."""
-    import os
+def test_no_stale_or_foreign_view_answers_for_a_missing_table(
+    lake, spark, tmp_path
+):
+    """A lake registers each table it reads as a session temp view; a
+    dropped or renamed table, or another lake's table of the same name,
+    must not resolve through such a view.  A view other code registered
+    under such a name since still resolves."""
+    from pyspark.errors import AnalysisException
 
-    lake = DuckLakeSpark(
-        spark=spark,
-        data_path=str(tmp_path / "data"),
-        local_catalog=str(tmp_path / "catalog"),
-    )
-    lake.sql("USE db")
     lake.sql("CREATE TABLE t(id INTEGER)")
     lake.sql("INSERT INTO t VALUES (1), (2)")
-    cat_dir = str(tmp_path / "catalog")
-    os.rename(cat_dir, cat_dir + ".old")  # crash state: primary missing
-    lake2 = DuckLakeSpark(
+    assert rows(lake.sql("SELECT * FROM t ORDER BY id")) == [(1,), (2,)]
+    other = DuckLakeSpark(
         spark=spark,
-        data_path=str(tmp_path / "data"),
-        local_catalog=cat_dir,
+        data_path=str(tmp_path / "data2"),
+        local_catalog=str(tmp_path / "catalog2"),
     )
-    lake2.sql("USE db")
-    assert rows(lake2.sql("SELECT * FROM t")) == [(1,), (2,)]
+    with pytest.raises(AnalysisException):
+        other.sql("SELECT * FROM t").collect()
+    assert rows(lake.sql("SELECT count(*) FROM t")) == [(2,)]
+    lake.sql("ALTER TABLE t RENAME TO u")
+    with pytest.raises(AnalysisException):
+        lake.sql("SELECT * FROM t").collect()
+    assert rows(lake.sql("SELECT count(*) FROM u")) == [(2,)]
+    lake.sql("DROP TABLE u")
+    with pytest.raises(AnalysisException):
+        lake.sql("SELECT * FROM u").collect()
+    lake.sql("CREATE TABLE u(id INTEGER)")
+    lake.sql("SELECT * FROM u").collect()
+    spark.range(3).createOrReplaceTempView("u")
+    lake.sql("DROP TABLE u")
+    assert rows(lake.sql("SELECT count(*) FROM u")) == [(3,)]
+    spark.catalog.dropTempView("u")
 
 
 # -- round-2: schema evolution -------------------------------------------------

@@ -427,12 +427,7 @@ def test_driver_window_samples_every_family():
     def fam(n: str) -> str:
         return "tpch" if re.match(r"q\d\d_", n) else n.split("_")[0]
 
-    # 'repr' is the answered r8 diagnostic-canary family, deliberately
-    # retired from the scored window per VERDICT-r8 task 3 (the driver's
-    # value hash floats decimals — finding recorded, policy enforced by
-    # test_registry_has_no_decimal_output_columns); it stays in the
-    # registry tail only.
-    missing = {fam(n) for n in names} - {fam(n) for n in first50} - {"repr"}
+    missing = {fam(n) for n in names} - {fam(n) for n in first50}
     assert not missing, f"families outside the driver window: {missing}"
     osql = e.oracle_sql()
     no_oracle = [n for n in first50 if n not in osql]

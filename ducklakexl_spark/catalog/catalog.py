@@ -1099,6 +1099,51 @@ class DuckLakeCatalog:
             f"deleted_from_table:{table_id}", next_cat, next_file
         )
 
+    def retire_data_files(
+        self, table_id: int, data_file_ids, commit: bool = True
+    ) -> int | None:
+        """Metadata-only delete of whole data files: their
+        ``ducklake_data_file`` rows and live delete files end at the next
+        snapshot, and the table's record count drops by their live rows
+        (record_count − delete_count) and its byte count by their bytes.
+        The files are not queued for GC: they still back the older
+        snapshots, and expire_snapshots queues them once those expire.
+        ``commit=False`` stages the change like register_delete_files."""
+        fids = [int(f) for f in data_file_ids]
+        snapshot = self.current_snapshot + 1
+        data = self.tables["ducklake_data_file"]
+        mask = (
+            self.live_mask(data)
+            & (data["table_id"] == table_id)
+            & data["data_file_id"].isin(fids)
+        )
+        removed = int(data.loc[mask, "record_count"].sum())
+        removed_bytes = int(data.loc[mask, "file_size_bytes"].fillna(0).sum())
+        dels = self.tables["ducklake_delete_file"]
+        if not dels.empty:
+            dmask = (
+                self.live_mask(dels)
+                & (dels["table_id"] == table_id)
+                & dels["data_file_id"].isin(fids)
+            )
+            removed -= int(dels.loc[dmask, "delete_count"].sum())
+            self._end_rows("ducklake_delete_file", dmask, snapshot)
+        self._end_rows("ducklake_data_file", mask, snapshot)
+        self._edit_stats(
+            table_id,
+            record_count=lambda c: c - removed,
+            file_size_bytes=lambda c: c - removed_bytes,
+        )
+        if not commit:
+            return None
+        return self.commit_staged(f"deleted_from_table:{table_id}")
+
+    def commit_staged(self, changes: str) -> int:
+        """Commit the rows that ``commit=False`` calls staged as one
+        snapshot."""
+        next_cat, next_file = self._counters()
+        return self.commit_snapshot(changes, next_cat, next_file)
+
     # -- data inlining (DuckLake spec "Data Inlining") -------------------------
 
     def inlined_rows(
@@ -1138,10 +1183,7 @@ class DuckLakeCatalog:
         )
         if not commit:
             return None
-        next_cat, next_file = self._counters()
-        return self.commit_snapshot(
-            f"inserted_into_table:{table_id}", next_cat, next_file
-        )
+        return self.commit_staged(f"inserted_into_table:{table_id}")
 
     def end_inlined_rows(
         self, table_id: int, row_ids: list[int], commit: bool = True
@@ -1162,10 +1204,7 @@ class DuckLakeCatalog:
         self._edit_stats(table_id, record_count=lambda c: c - n)
         if not commit:
             return None
-        next_cat, next_file = self._counters()
-        return self.commit_snapshot(
-            f"deleted_from_table:{table_id}", next_cat, next_file
-        )
+        return self.commit_staged(f"deleted_from_table:{table_id}")
 
     def truncate_table(self, name: str) -> int:
         table_id = self.table_id(name)

@@ -36,11 +36,13 @@ import urllib.parse
 import uuid
 
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.conversion import LocalDataToArrowConversion
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ducklakexl_spark import iofs
@@ -433,6 +435,62 @@ def _transform_partition_bound(value: object, transform: str) -> str | None:
     if not re.match(r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}", s):
         return None
     return s.replace("T", " ")[: _PART_TRANSFORM_SLICE[transform]]
+
+
+# column types whose statistics compare exactly against a numeric literal
+_EXACT_TYPES = (T.IntegralType, T.DecimalType)
+# what a file's [lo, hi] must satisfy for EVERY row to match ``col op v``
+_PROOF = {
+    "=": lambda lo, hi, v: lo == v and hi == v,
+    ">=": lambda lo, hi, v: lo >= v,
+    ">": lambda lo, hi, v: lo > v,
+    "<=": lambda lo, hi, v: hi <= v,
+    "<": lambda lo, hi, v: hi < v,
+}
+
+
+def _footer_min_max(st) -> tuple:
+    """(min, max) of a parquet column chunk's statistics.  pyarrow cannot
+    decode a DECIMAL stored as INT32/INT64 (how Spark writes precision
+    <= 18): those come from the raw unscaled integers."""
+    try:
+        return st.min, st.max
+    except NotImplementedError:
+        if st.logical_type.type != "DECIMAL" or st.physical_type not in (
+            "INT32", "INT64"
+        ):
+            raise
+        scale = -int(json.loads(st.logical_type.to_json())["scale"])
+        return (
+            _decimal.Decimal(int(st.min_raw)).scaleb(scale),
+            _decimal.Decimal(int(st.max_raw)).scaleb(scale),
+        )
+
+
+def _exact_number(s) -> _decimal.Decimal | None:
+    """A statistics or partition value string as an exact finite
+    Decimal, else None."""
+    try:
+        d = _decimal.Decimal(str(s))
+    except (_decimal.InvalidOperation, ValueError):
+        return None
+    return d if d.is_finite() else None
+
+
+def _proven(fids, los, his, op: str, value) -> list[int]:
+    """The file ids whose exact [lo, hi] prove ``col op value`` for every
+    row (see DuckLakeSpark._file_matches)."""
+    test = _PROOF.get(op)
+    if test is None:
+        return []
+    out = []
+    for f, lo, hi in zip(fids, los, his):
+        lo, hi = _exact_number(lo), _exact_number(hi)
+        if lo is not None and hi is not None and test(lo, hi, value):
+            out.append(int(f))
+    return out
+
+
 _CREATE_SCHEMA_RE = re.compile(
     r"^\s*CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s*$", re.I
 )
@@ -776,6 +834,14 @@ def _register_lake_view(name: str, df: DataFrame) -> None:
     _LAKE_VIEWS[name] = df
 
 
+def _named_in(names, idents: set[str]) -> list[str]:
+    """The ``names`` that occur among a statement's identifiers: SQL
+    names (DuckDB's tables and columns, Spark's temp views) match
+    without regard to case."""
+    folded = {i.lower() for i in idents}
+    return [n for n in names if n.lower() in folded]
+
+
 def _drop_stale_lake_views(
     spark: SparkSession, idents: set[str], fresh: set[str]
 ) -> None:
@@ -783,7 +849,7 @@ def _drop_stale_lake_views(
     another lake's table, or this lake's dropped or renamed one, must not
     answer for a name the statement's lake does not hold.  A view that
     other code registered under the name since is left alone."""
-    for name in (idents & _LAKE_VIEWS.keys()) - fresh:
+    for name in set(_named_in(_LAKE_VIEWS, idents)) - fresh:
         df = _LAKE_VIEWS.pop(name, None)
         try:
             ours = df is not None and spark.table(name).sameSemantics(df)
@@ -2514,7 +2580,7 @@ def _duck_fn_emit(key: str, args: list[str]) -> str:
         # Mask to the runtime width via typeof().  Found by the round-5
         # exploratory fuzz sweep.  Already-masked args are this
         # template's own output: pass through (idempotence).
-        if "CASE typeof(" in a[0]:
+        if "WHEN 'int' THEN CAST(4294967295 AS BIGINT)" in a[0]:
             return f"bit_count({a[0]})"
         if re.search(r"\b(least|greatest)\s*\(", a[0], re.I):
             # DuckDB's least/greatest are declared over BIGINT (an
@@ -4070,8 +4136,11 @@ _INT_CAST_TARGETS = {
 _BIGINT_CAST_TARGETS = {"bigint", "int8", "long"}
 _AS_WORD_RE = re.compile(r"(?<!\w)as(?!\w)", re.I)
 _INT_CAST_WRAPPED_RE = re.compile(
-    r"(?is)^round\s*\(\s*(cast|try_cast)\s*\("
+    r"(?is)^(?:b?round\s*\(\s*(cast|try_cast)\s*\("
+    r"|if\s*\(\s*upper\s*\(\s*(?:case\s+)?typeof\s*\()"
 )
+_NUMBER_RE = re.compile(r"^[-+]?\d+(?:\.\d*)?(e[-+]?\d+)?$", re.I)
+_FLOAT_TYPE_RE = re.compile(r"^(?:double|float[48]?|real)$", re.I)
 
 
 _INTERVAL_EXPR_RE = re.compile(r"\bINTERVAL\s*\(", re.I)
@@ -4154,12 +4223,42 @@ def _name_chain_start(stmt: str, j: int) -> int:
     return k + 1
 
 
+def _cast_operand_start(stmt: str, j: int) -> int:
+    """Start of the ``::`` operand ending at ``stmt[j]``: a parenthesized
+    group with a preceding call/name, a string literal (typed literals
+    keep their keyword), or a dotted name chain; ``j + 1`` when none."""
+    if stmt[j] in ")]}":
+        start = _literal_spans(stmt).partner.get(j, -1)
+        if start < 0:
+            return j + 1
+        # include a preceding call/name: fn(...)::INT
+        k = start - 1
+        while k >= 0 and (stmt[k].isalnum() or stmt[k] in "._"):
+            k -= 1
+        return k + 1
+    if stmt[j] == "'":
+        k = _literal_spans(stmt).span(j)[0]
+        # typed literals: DATE '…'::x etc. keep their keyword
+        w = k - 1
+        while w >= 0 and stmt[w].isspace():
+            w -= 1
+        e = w
+        while w >= 0 and (stmt[w].isalnum() or stmt[w] == "_"):
+            w -= 1
+        if stmt[w + 1 : e + 1].upper() in ("DATE", "TIMESTAMP", "TIME"):
+            return w + 1
+        return k
+    return _name_chain_start(stmt, j)
+
+
 def rewrite_int_colon_casts(stmt: str) -> str:
     """``x::INTEGER`` → ``CAST(x AS INTEGER)`` for integer targets so
     rewrite_int_cast_rounding sees them — Spark parses ``::`` natively
     but truncates where DuckDB rounds.  Operand backscan covers
     parenthesized groups, string literals, and dotted identifiers /
-    numeric literals, and quoted identifiers with their qualifiers;
+    numeric literals, and quoted identifiers with their qualifiers; an
+    operand that is itself a cast takes its whole chain
+    (``2.5::DOUBLE::INT`` → ``CAST(2.5::DOUBLE AS INT)``).
     ``::INT[]`` array suffixes are excluded (they belong to
     rewrite_array_type_suffix)."""
     pos = 0
@@ -4173,33 +4272,21 @@ def rewrite_int_colon_casts(stmt: str) -> str:
         j = m.start() - 1
         while j >= 0 and stmt[j].isspace():
             j -= 1
-        if j < 0:
-            pos = m.end()
-            continue
-        if stmt[j] in ")]}":
-            start = _literal_spans(stmt).partner.get(j, -1)
-            if start < 0:
-                pos = m.end()
-                continue
-            # include a preceding call/name: fn(...)::INT
+        start = _cast_operand_start(stmt, j) if j >= 0 else j + 1
+        while start <= j:
+            # the operand is a cast's type: take that cast's operand too
             k = start - 1
-            while k >= 0 and (stmt[k].isalnum() or stmt[k] in "._"):
+            while k >= 0 and stmt[k].isspace():
                 k -= 1
-            start = k + 1
-        elif stmt[j] == "'":
-            k = _literal_spans(stmt).span(j)[0]
-            start = k
-            # typed literals: DATE '…'::x etc. keep their keyword
-            w = k - 1
-            while w >= 0 and stmt[w].isspace():
-                w -= 1
-            e = w
-            while w >= 0 and (stmt[w].isalnum() or stmt[w] == "_"):
-                w -= 1
-            if stmt[w + 1 : e + 1].upper() in ("DATE", "TIMESTAMP", "TIME"):
-                start = w + 1
-        else:
-            start = _name_chain_start(stmt, j)
+            if k < 1 or stmt[k - 1 : k + 1] != "::":
+                break
+            k -= 2
+            while k >= 0 and stmt[k].isspace():
+                k -= 1
+            inner = _cast_operand_start(stmt, k) if k >= 0 else 0
+            if inner > k:
+                break
+            start = inner
         if start > j:
             pos = m.end()
             continue
@@ -4210,16 +4297,46 @@ def rewrite_int_colon_casts(stmt: str) -> str:
     return stmt
 
 
+def _floating_operand(expr: str) -> bool | None:
+    """Whether a cast operand is floating point, when its text alone
+    shows it: a numeric literal (DECIMAL unless it has an exponent), one
+    whole ``CAST(… AS type)`` or an ``operand::type``; else None."""
+    m = _NUMBER_RE.match(expr)
+    if m:
+        return m.group(1) is not None
+    m = _CAST_OPEN_RE.match(expr)
+    lex = _literal_spans(expr)
+    if m and lex.partner.get(m.end() - 1) == len(expr) - 1:
+        as_pos = -1
+        for a in _top_level_matches(expr, _AS_WORD_RE, m.end()):
+            as_pos = a.start()
+        if as_pos < 0:
+            return None
+        return bool(_FLOAT_TYPE_RE.match(expr[as_pos + 2 : -1].strip()))
+    colon = expr.rfind("::")
+    if colon > 0 and not lex.span(colon):
+        j = colon - 1
+        while j >= 0 and expr[j].isspace():
+            j -= 1
+        if j >= 0 and _cast_operand_start(expr, j) == 0:
+            return bool(_FLOAT_TYPE_RE.match(expr[colon + 2 :].strip()))
+    return None
+
+
 def rewrite_int_cast_rounding(stmt: str) -> str:
-    """DuckDB rounds numeric→integer casts half away from zero
-    (CAST(1.5 AS INT) = 2); Spark truncates toward zero (= 1).  Emit
+    """DuckDB rounds numeric→integer casts to nearest (CAST(1.5 AS INT)
+    = 2); Spark truncates toward zero (= 1).  Emit
     ``CAST(round(<numeric probe>) AS T)``: the probe is DOUBLE for
     ≤32-bit targets (exact across their whole range) and
     DECIMAL(38,9) via try_cast for BIGINT (exact for all longs; a
     probe overflow goes NULL where DuckDB errors — documented
     leniency, same class as invalid-cast NULLs).  Booleans and numeric
-    strings survive the probe; round() matches DuckDB's half-away
-    ties.  The already-wrapped guard keeps the rewrite chain
+    strings survive the probe.  Ties follow the operand's type as in
+    DuckDB 1.0: a DECIMAL rounds half away from zero (round()), a
+    DOUBLE or FLOAT half to even (bround(): 2.5 → 2, 3.5 → 4).  An
+    operand whose type the text does not show picks between them on
+    ``typeof()``, which Spark folds to a constant.  The already-wrapped
+    guard keeps the rewrite chain
     idempotent (the sign() re-wrap lesson, VERDICT r4).  Nested casts
     are rewritten inside their wrapped operand, all over the one lexed
     text; an unbalanced CAST ends the rewriting."""
@@ -4259,8 +4376,18 @@ def rewrite_int_cast_rounding(stmt: str) -> str:
                 probe = f"try_cast({expr} AS DECIMAL(38,9))"
             else:
                 probe = f"try_cast({expr} AS DOUBLE)"
+            floating = _floating_operand(expr)
+            if floating is not None:
+                rounded = f"{'b' if floating else ''}round({probe})"
+            else:
+                # upper(): the DuckDB-function pass later maps typeof()
+                # to DuckDB's type names
+                rounded = (
+                    f"if(upper(typeof({expr})) IN ('DOUBLE', 'FLOAT'), "
+                    f"bround({probe}), round({probe}))"
+                )
             out.append(
-                f"{stmt[done : m.start()]}{m.group(1)}(round({probe}) "
+                f"{stmt[done : m.start()]}{m.group(1)}({rounded} "
                 f"AS {target})"
             )
             done = close_i + 1
@@ -7386,7 +7513,12 @@ class DuckLakeSpark:
                     # the positional fallback must not re-consume slots
                     col_list = "(" + ", ".join(names) + ")"
                 source_sql = "VALUES " + ", ".join(out_tuples)
-            df = self.spark.sql(f"SELECT * FROM {source_sql} AS __v({alias_cols})")
+            # one file per VALUES statement, as DuckLake writes it (a
+            # local relation otherwise splits into a file per row)
+            df = self.spark.sql(
+                f"SELECT /*+ COALESCE(1) */ * FROM {source_sql} "
+                f"AS __v({alias_cols})"
+            )
             df = df.toDF(*names)
         else:
             df = self._select(source_sql)
@@ -7627,7 +7759,9 @@ class DuckLakeSpark:
                 else []
             )
         )
-        rows = self.spark.createDataFrame(data, s)
+        rows = self.spark.createDataFrame(
+            LocalDataToArrowConversion.convert(data, s, False), s
+        )
         for f in schema.fields:
             if f.name in defaults:
                 dflt, born = defaults[f.name]
@@ -8042,7 +8176,7 @@ class DuckLakeSpark:
                         entry["values"] += st.num_values or 0
                         try:
                             if st.has_min_max:
-                                mn, mx = st.min, st.max
+                                mn, mx = _footer_min_max(st)
                                 if entry["min"] is None or mn < entry["min"]:
                                     entry["min"] = mn
                                 if entry["max"] is None or mx > entry["max"]:
@@ -8473,6 +8607,7 @@ class DuckLakeSpark:
         with_position: bool = False,
         predicates: list[tuple[str, str, object]] | None = None,
         columns: list[str] | None = None,
+        paths: list[str] | None = None,
     ) -> DataFrame:
         """Snapshot-resolved scan with positional-delete application.
 
@@ -8480,6 +8615,8 @@ class DuckLakeSpark:
         against ducklake_file_column_statistics before Spark ever lists the
         files — the same pruning DuckLake does (SURVEY §4 item 2); parquet
         footer pushdown then prunes row groups within surviving files.
+        ``paths`` instead names the data files to scan, already chosen by
+        the caller (a DELETE scans the files it could not retire whole).
 
         ``columns`` (a superset of the statement's referenced columns,
         from _extract_scan_columns) narrows ENCRYPTED scans: Catalyst
@@ -8508,34 +8645,28 @@ class DuckLakeSpark:
             narrowed = [f for f in schema.fields if f.name in keep]
             if narrowed and len(narrowed) < len(schema.fields):
                 schema = T.StructType(narrowed)
-        if files.empty:
-            self._last_scan_file_count = 0
-            self._last_scan_paths = []
-            df = self.spark.createDataFrame([], schema)
+        if paths is None:
+            paths = list(files["path"])
+            if predicates and paths:
+                paths = self._skip_files(tid, snapshot, paths, predicates)
+        self._last_scan_file_count = len(paths)
+        self._last_scan_paths = paths
+        if not paths:
+            # a local relation, not a Python-rows RDD job
+            empty = schema
             if with_position:
-                df = df.withColumn("__file", F.lit(None).cast("string")).withColumn(
-                    "__pos", F.lit(None).cast("long")
+                empty = T.StructType(
+                    schema.fields
+                    + [
+                        T.StructField("__file", T.StringType()),
+                        T.StructField("__pos", T.LongType()),
+                    ]
                 )
+            df = self.spark.createDataFrame(
+                to_arrow_schema(empty).empty_table(), empty
+            )
             df = self._union_inlined(df, tid, snapshot, schema, with_position)
             return self._apply_generated(df, tid, schema, snapshot)
-        paths = list(files["path"])
-        if predicates:
-            paths = self._skip_files(tid, snapshot, paths, predicates)
-            self._last_scan_file_count = len(paths)
-            self._last_scan_paths = paths
-            if not paths:
-                df = self.spark.createDataFrame([], schema)
-                if with_position:
-                    df = df.withColumn(
-                        "__file", F.lit(None).cast("string")
-                    ).withColumn("__pos", F.lit(None).cast("long"))
-                df = self._union_inlined(
-                    df, tid, snapshot, schema, with_position
-                )
-                return self._apply_generated(df, tid, schema, snapshot)
-        else:
-            self._last_scan_file_count = len(paths)
-            self._last_scan_paths = paths
         dels = self.catalog.delete_files(tid, snapshot)
         if not dels.empty and len(paths) < len(files):
             # only the delete files of the data files left after skipping
@@ -8668,11 +8799,16 @@ class DuckLakeSpark:
                 )
         if resolved:
             fmeta = self.spark.createDataFrame(
-                [
-                    (self._norm_path_str(p), int(b))
-                    for p, b in zip(files["path"], files["begin_snapshot"])
-                ],
-                "__dfile string, __fbegin long",
+                pa.table(
+                    {
+                        "__dfile": [
+                            self._norm_path_str(p) for p in files["path"]
+                        ],
+                        "__fbegin": pa.array(
+                            files["begin_snapshot"].astype("int64"), pa.int64()
+                        ),
+                    }
+                )
             )
             df = df.join(
                 F.broadcast(fmeta), df["__file"] == fmeta["__dfile"], "left"
@@ -8716,8 +8852,15 @@ class DuckLakeSpark:
         return self._apply_generated(df, tid, schema, snapshot)
 
     def _skip_files(self, tid, snapshot, paths, predicates) -> list[str]:
+        """The files of ``paths`` that may hold a row matching every
+        predicate (see _file_matches)."""
+        return self._file_matches(tid, snapshot, paths, predicates)[0]
+
+    def _file_matches(
+        self, tid, snapshot, paths, predicates, prove: bool = False
+    ) -> tuple[list[str], list[str]]:
         """Catalog-side file skipping from per-file min/max stats and
-        exact partition values.
+        exact partition values: ``(kept, covered)``.
 
         Fully vectorized over the stats tables (columnar pandas ops, no
         per-row Python) so pruning stays O(files) at C speed — the
@@ -8726,6 +8869,18 @@ class DuckLakeSpark:
         some predicate's [min, max] interval (or exact partition value)
         proves it can't contain a match; stats that fail the type
         conversion coerce to NaN and never prune (conservative).
+
+        With ``prove`` (the caller knows the predicates are the whole
+        filter) ``covered`` lists the kept files whose statistics prove
+        that EVERY row matches every predicate, the evidence a DELETE
+        needs to retire a file in the catalog alone (Iceberg's strict
+        metrics evaluator).  A proof needs an integer or decimal column,
+        a numeric literal, and either a stats row with no NULL, no NaN
+        and a value count equal to the file's row count whose min/max
+        satisfy the predicate compared exactly (Python int/Decimal,
+        never float64), or an identity partition value of the file's
+        own scheme.  No predicate proves every file; no stats row (a
+        column added after the file) proves none.
         """
         stats = self.catalog.tables["ducklake_file_column_statistics"]
         dfiles = self.catalog.data_files(tid, snapshot)
@@ -8733,6 +8888,23 @@ class DuckLakeSpark:
         id_by_name = {r.column_name: int(r.column_id) for r in cols.itertuples()}
         path_by_fid = dict(zip(dfiles["data_file_id"], dfiles["path"]))
         drop_fids: set[int] = set()
+        # per predicate, the files it holds for every row of (prove only)
+        proofs: list[set[int]] = [set() for _ in predicates]
+        pred_cols = {c for c, _op, _v in predicates}
+        exact_cols = {
+            r.column_name
+            for r in cols.itertuples()
+            if r.column_name in pred_cols
+            and isinstance(
+                ducklake_type_to_spark(str(r.column_type)), _EXACT_TYPES
+            )
+        }
+
+        def _exact(cname, value) -> bool:
+            return cname in exact_cols and (
+                isinstance(value, _decimal.Decimal)
+                or (isinstance(value, int) and not isinstance(value, bool))
+            )
 
         # coercion of a stats column is O(files) over strings — cache it
         # per (column object, value class) so N predicates on the same
@@ -8747,7 +8919,7 @@ class DuckLakeSpark:
                 return hit
             if isinstance(value, bool):
                 out = series.map({"true": True, "false": False, True: True, False: False})
-            elif isinstance(value, (int, float)):
+            elif isinstance(value, (int, float, _decimal.Decimal)):
                 out = pd.to_numeric(series, errors="coerce")
             elif isinstance(value, (_dt.datetime, _dt.date)):
                 # table(predicates=[("ts", ">=", datetime(...))]) — the
@@ -8774,11 +8946,12 @@ class DuckLakeSpark:
                 return lo > value
             return None
 
+        rows_by_fid = dict(zip(dfiles["data_file_id"], dfiles["record_count"]))
         srel = stats[stats["table_id"] == tid]
         # one stats slice per referenced column (shared across that
         # column's predicates so the _coerce cache can hit)
         _rel_by_cid: dict[int, pd.DataFrame] = {}
-        for cname, op, value in predicates:
+        for i, (cname, op, value) in enumerate(predicates):
             cid = id_by_name.get(cname)
             if cid is None:
                 continue
@@ -8790,6 +8963,8 @@ class DuckLakeSpark:
             mn = _coerce(rel["min_value"], value)
             mx = _coerce(rel["max_value"], value)
             cmp_val = str(value) if isinstance(value, str) else value
+            if isinstance(value, _decimal.Decimal):
+                cmp_val = float(value)  # the pruning compare is float64
             if isinstance(value, (_dt.datetime, _dt.date)):
                 cmp_val = pd.Timestamp(value)
                 cmp_val = (
@@ -8801,14 +8976,48 @@ class DuckLakeSpark:
             if bad is None:
                 continue
             bad = bad.fillna(False) & mn.notna() & mx.notna()
+            if op in (">", "<") and _exact(cname, value):
+                # float64 rounds distinct decimals (and longs past 2^53)
+                # to one value: settle a tie at the bound exactly
+                edge = "max_value" if op == ">" else "min_value"
+                tie = bad & ((mx if op == ">" else mn) == cmp_val)
+                if tie.any():
+                    bad[tie] = [
+                        (d := _exact_number(x)) is not None
+                        and (d <= value if op == ">" else d >= value)
+                        for x in rel.loc[tie, edge]
+                    ]
             # .tolist() converts C-side; a python genexpr with int() per
             # row costs ~0.6 s per million dropped files
             drop_fids.update(rel.loc[bad, "data_file_id"].to_numpy().tolist())
+            if prove and _exact(cname, value):
+                # stats that cover every row: no NULL, no NaN, and a
+                # value count of the file's row count (a row group
+                # without statistics would be missing from min/max)
+                full = (
+                    ~bad
+                    & (rel["null_count"] == 0)
+                    & rel["contains_nan"].ne(True)
+                    & (
+                        rel["value_count"]
+                        == rel["data_file_id"].map(rows_by_fid)
+                    )
+                )
+                sub = rel[full]
+                proofs[i].update(
+                    _proven(
+                        sub["data_file_id"], sub["min_value"],
+                        sub["max_value"], op, value,
+                    )
+                )
         # partition-value pruning (exact, not min/max): a file whose
         # recorded partition value fails the predicate can't match at all
         scheme = self.catalog.partition_scheme(tid, snapshot)
         if scheme:
             _pid, keys = scheme
+            pid_by_fid = dict(
+                zip(dfiles["data_file_id"], dfiles["partition_id"])
+            )
             name_by_id = {v: k for k, v in id_by_name.items()}
             key_by_name = {
                 name_by_id[cid]: (i, transform)
@@ -8816,7 +9025,10 @@ class DuckLakeSpark:
             }
             pvt = self.catalog.tables["ducklake_file_partition_value"]
             prel = pvt[pvt["table_id"] == tid]
-            for cname, op, value in predicates:
+            # a file written under an earlier scheme numbers its keys
+            # after that scheme: only the current scheme's files compare
+            prel = prel[prel["data_file_id"].map(pid_by_fid) == _pid]
+            for i, (cname, op, value) in enumerate(predicates):
                 hit = key_by_name.get(cname)
                 if hit is None:
                     continue
@@ -8824,6 +9036,11 @@ class DuckLakeSpark:
                 rel = prel[prel["partition_key_index"] == ki]
                 if rel.empty:
                     continue
+                if prove and transform == "identity" and _exact(cname, value):
+                    pv = rel["partition_value"]
+                    proofs[i].update(
+                        _proven(rel["data_file_id"], pv, pv, op, value)
+                    )
                 if transform != "identity":
                     # truncated-value pruning: trunc() is monotone, so
                     # col >[=] X can only match files whose partition
@@ -8849,6 +9066,8 @@ class DuckLakeSpark:
                     continue
                 v = _coerce(rel["partition_value"], value)
                 cmp_val = str(value) if isinstance(value, str) else value
+                if isinstance(value, _decimal.Decimal):
+                    cmp_val = float(value)
                 # exact values: '=' prunes on any inequality
                 bad = (
                     (v != cmp_val)
@@ -8860,7 +9079,12 @@ class DuckLakeSpark:
                 bad = bad.fillna(False) & v.notna()
                 drop_fids.update(int(f) for f in rel.loc[bad, "data_file_id"])
         dropped = {path_by_fid.get(f) for f in drop_fids}
-        return [p for p in paths if p not in dropped]
+        kept = [p for p in paths if p not in dropped]
+        if not prove:
+            return kept, []
+        covered = set.intersection(*proofs) if proofs else set(path_by_fid)
+        proven = {path_by_fid[f] for f in covered if f in path_by_fid}
+        return kept, [p for p in kept if p in proven]
 
     # ------------------------------------------------------------ DELETE/UPDATE
 
@@ -8926,47 +9150,71 @@ class DuckLakeSpark:
         return None
 
     def _delete(self, name: str, where: str | None) -> None:
+        """DELETE.  A data file whose statistics prove that every live row
+        matches the whole WHERE (every file, without a WHERE) retires in
+        the catalog alone: no scan, no Spark job, no delete file.  The
+        other files the WHERE's predicates cannot skip are scanned with
+        the inlined rows; their hits become positional delete files and
+        ended inlined rows.  All of it lands in ONE snapshot."""
         where = apply_expr_dialect(where) if where else where
         tid = self.catalog.table_id(name)
-        preds = None
+        files = self.catalog.data_files(tid)
+        preds, whole = [], True
         if where:
-            # DELETE's WHERE prunes the live scan at the catalog level
-            # too — a date-ranged DELETE on a 100 TB table opens only
-            # the files whose stats overlap the range
             cols = {
                 r.column_name
                 for r in self.catalog.columns(tid).itertuples()
             }
-            preds = self._conjunct_predicates(where, cols, (name, None))
-        live = self.table_df(name, with_position=True, predicates=preds)
-        scan_paths = self._last_scan_paths
-        hits = live.filter(where) if where else live
-        hit_pos = hits.select(
-            F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
+            preds, whole = self._where_conjuncts(where, cols, (name, None))
+        # a date-ranged DELETE on a 100 TB table opens only the files
+        # whose stats overlap the range
+        kept, covered = self._file_matches(
+            tid, None, list(files["path"]), preds, prove=whole
         )
-        if not self.catalog.inlined_rows(tid).empty:
-            # catalog-inlined rows delete as MVCC end_snapshot
-            # transitions, file rows as positional delete files — both
-            # land in ONE snapshot (the staged register + the committing
-            # end_inlined_rows target the same current+1 id).  The hit
-            # set is checkpointed so splitting it doesn't re-run the scan.
-            hit_pos = hit_pos.localCheckpoint(eager=True)
-            marker = f"__inlined__/{tid}"
-            inl_ids = [
-                int(r["pos"])
-                for r in hit_pos.filter(
-                    F.col("file_path") == marker
-                ).collect()
-            ]
-            file_hits = hit_pos.filter(F.col("file_path") != marker)
-            if inl_ids:
-                self._register_deletes(
-                    name, tid, file_hits, commit=False, paths=scan_paths
-                )
-                self.catalog.end_inlined_rows(tid, inl_ids, commit=True)
-                return None
-            hit_pos = file_hits
-        self._register_deletes(name, tid, hit_pos, paths=scan_paths)
+        covered = set(covered)
+        # a covered file whose rows are all deleted already stays as it is
+        gone = self.catalog.delete_files(tid).groupby("data_file_id")[
+            "delete_count"
+        ].sum()
+        retire = [
+            int(f)
+            for f, p, n in zip(
+                files["data_file_id"], files["path"], files["record_count"]
+            )
+            if p in covered and n > gone.get(f, 0)
+        ]
+        scan = [p for p in kept if p not in covered]
+        inlined = self.catalog.inlined_rows(tid)
+        wrote, inl_ids = False, []
+        if not where:
+            inl_ids = [int(r) for r in inlined.get("row_id", [])]
+        elif scan or not inlined.empty:
+            live = self.table_df(name, with_position=True, paths=scan)
+            hit_pos = live.filter(where).select(
+                F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
+            )
+            if not inlined.empty:
+                # catalog-inlined rows delete as MVCC end_snapshot
+                # transitions; the hit set is checkpointed so splitting
+                # it doesn't re-run the scan
+                hit_pos = hit_pos.localCheckpoint(eager=True)
+                marker = f"__inlined__/{tid}"
+                inl_ids = [
+                    int(r["pos"])
+                    for r in hit_pos.filter(
+                        F.col("file_path") == marker
+                    ).collect()
+                ]
+                hit_pos = hit_pos.filter(F.col("file_path") != marker)
+            wrote = self._register_deletes(
+                name, tid, hit_pos, commit=False, paths=scan
+            )
+        if inl_ids:
+            self.catalog.end_inlined_rows(tid, inl_ids, commit=False)
+        if retire:
+            self.catalog.retire_data_files(tid, retire, commit=False)
+        if wrote or inl_ids or retire:
+            self.catalog.commit_staged(f"deleted_from_table:{tid}")
         return None
 
     _DELETE_STRUCT = T.StructType(
@@ -10435,7 +10683,7 @@ class DuckLakeSpark:
             # probe references are registered first (idempotent; the
             # main path re-registers them later anyway)
             idents = sql_identifiers(from_text)
-            fresh = set(self.catalog.table_names()) & idents
+            fresh = set(_named_in(self.catalog.table_names(), idents))
             for tname in fresh:
                 _register_lake_view(tname, self.table_df(tname))
             _drop_stale_lake_views(self.spark, idents, fresh)
@@ -10994,23 +11242,21 @@ class DuckLakeSpark:
             if cname in idents:
                 self._catalog_table_df(cname).createOrReplaceTempView(cname)
         fresh = set()
-        for tname in self.catalog.table_names():
-            if tname in idents:
-                preds = self._extract_scan_predicates(stmt, tname)
-                cols = self._extract_scan_columns(stmt, idents, tname)
-                _register_lake_view(
-                    tname, self.table_df(tname, predicates=preds, columns=cols)
-                )
-                fresh.add(tname)
-        for vname in self.catalog.view_names():
-            if vname in idents:
-                # re-resolve the stored SQL at the current snapshot
-                # (recursive: views over views/tables; _select_statement
-                # so PIVOT/UNPIVOT statement-form views resolve too)
-                _register_lake_view(
-                    vname, self._select_statement(self.catalog.view_sql(vname))
-                )
-                fresh.add(vname)
+        for tname in _named_in(self.catalog.table_names(), idents):
+            preds = self._extract_scan_predicates(stmt, tname)
+            cols = self._extract_scan_columns(stmt, idents, tname)
+            _register_lake_view(
+                tname, self.table_df(tname, predicates=preds, columns=cols)
+            )
+            fresh.add(tname)
+        for vname in _named_in(self.catalog.view_names(), idents):
+            # re-resolve the stored SQL at the current snapshot
+            # (recursive: views over views/tables; _select_statement
+            # so PIVOT/UNPIVOT statement-form views resolve too)
+            _register_lake_view(
+                vname, self._select_statement(self.catalog.view_sql(vname))
+            )
+            fresh.add(vname)
         _drop_stale_lake_views(self.spark, idents, fresh)
         # DuckDB percentage LIMIT (``LIMIT 40%``): strip the clause,
         # size it from the result's row count (truncating, DuckDB
@@ -11106,7 +11352,7 @@ class DuckLakeSpark:
                 return None
             # otherwise: multiplication (an operand precedes)
         tcols = [f.name for f in self.table_schema(tname).fields]
-        wanted = [c for c in tcols if c in idents]
+        wanted = _named_in(tcols, idents)
         if not wanted:
             wanted = tcols[:1]  # zero-column scans confuse Arrow
         return wanted if len(wanted) < len(tcols) else None
@@ -11156,7 +11402,7 @@ class DuckLakeSpark:
         ]
         refs = [
             m
-            for m in re.finditer(rf"\b{re.escape(tname)}\b", stmt)
+            for m in re.finditer(rf"\b{re.escape(tname)}\b", stmt, re.I)
             if not _inside_string_literal(stmt, m.start())
         ]
         if len(occurrences) != 1 or len(refs) != 1:
@@ -11248,31 +11494,47 @@ class DuckLakeSpark:
         makes every conjunct optional, so nothing may prune).  With
         ``require_qualified`` (join scope) an unqualified col could
         belong to another table, so only ``owner.col`` refs count."""
+        preds, _whole = self._where_conjuncts(
+            where_txt, cols, owners, require_qualified
+        )
+        return preds or None
+
+    def _where_conjuncts(
+        self,
+        where_txt: str,
+        cols: set,
+        owners: tuple,
+        require_qualified: bool = False,
+    ) -> tuple[list[tuple[str, str, object]], bool]:
+        """The predicates of _conjunct_predicates, and whether they are
+        the WHOLE filter (no top-level OR, every top-level AND conjunct
+        became a predicate).  Numeric literals are exact: ``int``, or
+        ``Decimal`` for a fractional one (SQL's ``2.5`` is a DECIMAL)."""
         if len(split_top_level_kw(where_txt, "OR")) > 1:
-            return None
+            return [], False
         preds: list[tuple[str, str, object]] = []
+        whole = True
         for conj in split_top_level_kw(where_txt, "AND"):
             pm = self._PRED_LIT_RE.match(conj.strip())
-            if not pm:
+            ref = pm.group(1).split(".") if pm else []
+            if (
+                not pm
+                or (len(ref) == 2 and ref[0] not in owners)
+                or (len(ref) == 1 and require_qualified)
+                or ref[-1] not in cols
+            ):
+                whole = False
                 continue
-            ref, op, lit = pm.group(1), pm.group(2), pm.group(3)
-            parts = ref.split(".")
-            if len(parts) == 2 and parts[0] not in owners:
-                continue
-            if len(parts) == 1 and require_qualified:
-                continue
-            col = parts[-1]
-            if col not in cols:
-                continue
+            op, lit = pm.group(2), pm.group(3)
             ls = _literal_str(re.sub(r"^(DATE|TIMESTAMP)\s*", "", lit, flags=re.I))
             if ls is not None:
                 value: object = ls
             elif re.match(r"^-?\d+$", lit):
                 value = int(lit)
             else:
-                value = float(lit)
-            preds.append((col, op, value))
-        return preds or None
+                value = _decimal.Decimal(lit)
+            preds.append((ref[-1], op, value))
+        return preds, whole
 
     # ------------------------------------------------------------------ misc
 
@@ -11293,8 +11555,6 @@ class DuckLakeSpark:
         frame = self.catalog.tables[tname]
         if "begin_snapshot" in frame.columns:
             frame = self.catalog.live(tname, snapshot)
-        import pyarrow as pa
-
         tbl = pa.Table.from_pandas(
             frame.reset_index(drop=True),
             schema=CATALOG_SCHEMAS[tname],

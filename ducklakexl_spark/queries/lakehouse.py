@@ -93,7 +93,9 @@ def lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lakehouse_update_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UPDATE (= positional delete + rewrite) then CTAS over the result."""
+    """DELETE (a positional delete file), UPDATE (= delete + rewrite; its
+    WHERE covers the whole file, which retires in the catalog) then CTAS
+    over the result."""
     lake = _fresh_lake(spark)
     return lake.sql(
         """
@@ -628,15 +630,16 @@ def lakehouse_table_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DuckLake spec's ``ducklake_table_info()`` TVF through sql()
     text: per-table live data-file / delete-file counts and sizes read
     straight from the catalog frames (no file listing, no data scan).
-    Two single-row INSERTs mint exactly two files for ti_a (a multi-row
-    VALUES may split across write partitions); the DELETE adds one
-    positional delete file; ti_b keeps its single file and no deletes."""
+    Two INSERTs mint exactly two files for ti_a (one per VALUES
+    statement); the DELETE of one row of the two-row file adds one
+    positional delete file (a file whose every row matched would retire
+    whole instead); ti_b keeps its single file and no deletes."""
     lake = _fresh_lake(spark)
     lake.sql(
         """
         CREATE TABLE ti_a(id INTEGER, v VARCHAR);
         INSERT INTO ti_a VALUES (1, 'a');
-        INSERT INTO ti_a VALUES (2, 'b');
+        INSERT INTO ti_a VALUES (2, 'b'), (3, 'c');
         DELETE FROM ti_a WHERE id = 2;
         CREATE TABLE ti_b(id INTEGER);
         INSERT INTO ti_b VALUES (7);

@@ -104,6 +104,15 @@ def get_spark(
         # not a license to collect corpus-sized frames.
         .config("spark.driver.maxResultSize", max_result_size(driver_mem))
         .config("spark.ui.enabled", "false")
+        # Tungsten pages of 1 MiB, not Spark's execution memory / cores / 16
+        # rounded up (8 MiB at a 2g local[4] driver, 64 MiB at 48g).  A
+        # page that is in use when a young collection runs is larger than
+        # the survivor space and goes straight to the old generation.  Over
+        # MB-sized lake tables that filled the old generation every few
+        # statements, and each full collection (~270 ms) landed on
+        # whichever statement was running.  A record larger than a page
+        # still gets a page of its own size.
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

@@ -1,6 +1,7 @@
 """Exploratory differential DML STATE fuzzing.
 
-Not collected by pytest — run by hand per work session:
+Run by hand per work session (tests/test_fuzz_dml.py runs a pinned
+slice in the suite):
 
     python tests/fuzz_dml.py [n_scripts] [seed]
 
@@ -9,9 +10,9 @@ INSERT/UPDATE/DELETE/ALTER/TRUNCATE statements) through the engine's
 lakehouse plane AND a DuckDB connection, comparing the full table state
 after every statement.  This is the write-path complement of
 fuzz_explore.py: it exercises file mints, positional delete files,
-inlined rows, schema evolution, and snapshot bookkeeping against
-DuckDB's transactional semantics.  Finds get fixed and pinned as
-curated flows in tests/test_lakehouse.py.
+inlined rows, schema evolution, snapshot bookkeeping and whole-file
+metadata-only deletes against DuckDB's transactional semantics.  Finds
+get fixed and pinned as curated flows in tests/test_lakehouse.py.
 """
 
 from __future__ import annotations
@@ -74,10 +75,22 @@ def _script(tbl: str) -> list[str]:
             f"WHERE v < {rng.randint(-20, 20)}",
         ])
 
+    def op_point_cycle() -> list[str]:
+        # a one-row INSERT writes a file its DELETE retires whole
+        k = next_k[0]
+        next_k[0] += 1
+        cols = "(k, v, s)" if has_w[0] else ""
+        return [
+            f"INSERT INTO {tbl} {cols} VALUES ({k}, {rng.randint(-50, 150)}, "
+            f"'p{k}')",
+            f"DELETE FROM {tbl} WHERE k = {k}",
+        ]
+
     def op_delete() -> str:
         return rng.choice([
             f"DELETE FROM {tbl} WHERE k % {rng.randint(3, 7)} = "
             f"{rng.randint(0, 2)}",
+            f"DELETE FROM {tbl} WHERE k >= {rng.randint(0, next_k[0] + 2)}",
             f"DELETE FROM {tbl} WHERE v BETWEEN {rng.randint(-30, 0)} "
             f"AND {rng.randint(1, 40)}",
             f"DELETE FROM {tbl} WHERE s LIKE '%{rng.choice('abxyz')}%'",
@@ -116,10 +129,86 @@ def _script(tbl: str) -> list[str]:
 
     pool = [op_insert, op_insert, op_self_insert, op_update, op_update,
             op_delete, op_delete, op_alter, op_truncate,
-            op_update_from, op_delete_using, op_drop_w]
-    for _ in range(rng.randint(6, 14)):
-        stmts.append(rng.choice(pool)())
-    return stmts
+            op_update_from, op_delete_using, op_drop_w, op_point_cycle]
+    return stmts + _draw(pool, 6, 14)
+
+
+def _draw(pool, lo: int, hi: int) -> list[str]:
+    """Between ``lo`` and ``hi`` ops drawn from ``pool``; an op returns
+    one statement or a list of them."""
+    out: list[str] = []
+    for _ in range(rng.randint(lo, hi)):
+        st = rng.choice(pool)()
+        out += st if isinstance(st, list) else [st]
+    return out
+
+
+def _retire_script(tbl: str) -> list[str]:
+    """Whole-file deletes: small INSERTs write files a DELETE's WHERE can
+    cover (a BIGINT key, a DECIMAL and a nullable INTEGER holding NULLs),
+    with point, range, OR and NULL-column filters, a column added after
+    the files, and UPDATEs (whose delete half goes the same way)."""
+    next_k = [0]
+    has_w = [False]
+
+    def row() -> str:
+        k = next_k[0]
+        next_k[0] += 1
+        n = "NULL" if rng.random() < 0.3 else str(rng.randint(0, 5))
+        return f"({k}, {rng.randint(-300, 300) / 100:.2f}, {n}, 's{k}')"
+
+    def op_insert() -> str:
+        rows = ", ".join(row() for _ in range(rng.randint(1, 4)))
+        return f"INSERT INTO {tbl} (k, d, n, s) VALUES {rows}"
+
+    def op_point_cycle() -> list[str]:
+        k = next_k[0]
+        return [
+            f"INSERT INTO {tbl} (k, d, n, s) VALUES {row()}",
+            f"DELETE FROM {tbl} WHERE k = {k}",
+        ]
+
+    def op_delete() -> str:
+        k = rng.randint(0, next_k[0] + 1)
+        d = f"{rng.randint(-300, 300) / 100:.2f}"
+        return rng.choice([
+            f"DELETE FROM {tbl} WHERE k = {k}",
+            f"DELETE FROM {tbl} WHERE k = {k}.0",
+            f"DELETE FROM {tbl} WHERE k >= {k}",
+            f"DELETE FROM {tbl} WHERE k < {k}",
+            f"DELETE FROM {tbl} WHERE k > {k} AND k <= {k + 3}",
+            f"DELETE FROM {tbl} WHERE k = {k} OR k = {k + 1}",
+            f"DELETE FROM {tbl} WHERE d >= {d}",
+            f"DELETE FROM {tbl} WHERE d < {d} AND k >= {k}",
+            f"DELETE FROM {tbl} WHERE n = {rng.randint(0, 5)}",
+            f"DELETE FROM {tbl} WHERE n >= {rng.randint(0, 5)}",
+            f"DELETE FROM {tbl} WHERE k >= {k} AND s LIKE 's%'",
+        ])
+
+    def op_update() -> str:
+        return (
+            f"UPDATE {tbl} SET s = s || '!' "
+            f"WHERE k >= {rng.randint(0, next_k[0] + 1)}"
+        )
+
+    def op_alter() -> str:
+        if has_w[0]:
+            return f"DELETE FROM {tbl} WHERE w = 7"
+        has_w[0] = True
+        return f"ALTER TABLE {tbl} ADD COLUMN w INTEGER DEFAULT 7"
+
+    def op_delete_all() -> str:
+        return f"DELETE FROM {tbl}"
+
+    stmts = [
+        f"CREATE TABLE {tbl} (k BIGINT, d DECIMAL(10,2), n INTEGER, "
+        f"s VARCHAR)",
+        op_insert(),
+    ]
+    pool = [op_insert, op_insert, op_point_cycle, op_point_cycle,
+            op_delete, op_delete, op_delete, op_update, op_alter,
+            op_delete_all]
+    return stmts + _draw(pool, 8, 16)
 
 
 def _pk_script(tbl: str) -> list[str]:
@@ -172,28 +261,22 @@ def _pk_script(tbl: str) -> list[str]:
 
     pool = [op_upsert_update, op_upsert_update, op_upsert_nothing,
             op_or_replace, op_or_ignore, op_update, op_delete]
-    for _ in range(rng.randint(5, 10)):
-        stmts.append(rng.choice(pool)())
-    return stmts
+    return stmts + _draw(pool, 5, 10)
 
 
-def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 30
-    seed = int(sys.argv[2]) if len(sys.argv) > 2 else random.randrange(1 << 30)
-    print(f"seed={seed} n_scripts={n}")
+def run_scripts(spark, n: int, seed: int, work_dir: str | None = None) -> int:
+    """Run ``n`` seeded scripts through the engine and DuckDB; print each
+    divergence and return their count."""
     rng.seed(seed)
-
-    spark = get_spark(app_name="fuzz_dml", master="local[8]",
-                      shuffle_partitions=8)
     con = duckdb.connect()
     finds = 0
     for si in range(n):
-        tmp = tempfile.mkdtemp(prefix="lake_dmlfuzz_")
+        tmp = tempfile.mkdtemp(prefix="lake_dmlfuzz_", dir=work_dir)
         lake = DuckLakeSpark(
             spark=spark, data_path=f"{tmp}/d", local_catalog=f"{tmp}/c"
         )
         tbl = f"t{si}"
-        stmts = (_pk_script if si % 3 == 2 else _script)(tbl)
+        stmts = (_script, _retire_script, _pk_script)[si % 3](tbl)
         snap_states: dict[int, list] = {}  # snapshot_id -> duck state
         for idx, st in enumerate(stmts):
             eng_err = duck_err = None
@@ -267,6 +350,17 @@ def main() -> int:
                     break
         if (si + 1) % 10 == 0:
             print(f"{si + 1}/{n} scripts done, {finds} finds")
+    con.close()
+    return finds
+
+
+def main() -> int:
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 30
+    seed = int(sys.argv[2]) if len(sys.argv) > 2 else random.randrange(1 << 30)
+    print(f"seed={seed} n_scripts={n}")
+    spark = get_spark(app_name="fuzz_dml", master="local[8]",
+                      shuffle_partitions=8)
+    finds = run_scripts(spark, n, seed)
     print(f"\nTOTAL: {n} scripts, {finds} finds")
     return 1 if finds else 0
 

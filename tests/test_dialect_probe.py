@@ -373,6 +373,22 @@ PROBES = [
      'SELECT "v"::INTEGER AS q, v::INTEGER AS b, t."v"::BIGINT AS t '
      "FROM (SELECT 2.7::DOUBLE AS v UNION ALL SELECT -1.6 "
      "UNION ALL SELECT 3.2) t"),
+    # a chained :: cast takes the whole chain as its operand, and an
+    # integer cast rounds DOUBLE ties to even but DECIMAL ties away
+    ("chained_colon_int_cast_ties",
+     "SELECT 2.5::DOUBLE::INTEGER AS a, (-2.5)::DOUBLE::INTEGER AS b, "
+     "3.5::DOUBLE::INTEGER AS c, 2.5::INTEGER AS d, "
+     "CAST(CAST(2.5 AS DOUBLE) AS INTEGER) AS e, "
+     "CAST(CAST(-3.5 AS DOUBLE) AS BIGINT) AS f"),
+    ("varchar_chain_int_cast",
+     "SELECT r_regionkey::VARCHAR::INTEGER AS k, '7'::VARCHAR::INTEGER AS s "
+     "FROM region"),
+    ("double_column_int_cast_ties",
+     "SELECT CAST(x AS INTEGER) AS i, CAST(x AS BIGINT) AS j "
+     "FROM (VALUES (2.5::DOUBLE), (3.5::DOUBLE), (-2.5::DOUBLE)) t(x)"),
+    ("decimal_column_int_cast_ties",
+     "SELECT CAST(x AS INTEGER) AS i, x::BIGINT AS j "
+     "FROM (VALUES (2.5), (-2.5), (0.5)) t(x)"),
 ]
 
 

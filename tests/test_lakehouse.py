@@ -1297,10 +1297,13 @@ def test_expire_snapshots_and_vacuum(lake):
     import os
 
     lake.sql("CREATE TABLE hist(id INTEGER);")
-    lake.sql("INSERT INTO hist VALUES (1);")          # s2
+    lake.sql("INSERT INTO hist VALUES (1), (3);")     # s2
     lake.sql("INSERT INTO hist VALUES (2);")          # s3
-    lake.sql("DELETE FROM hist WHERE id = 1;")        # s4: delete file
-    lake.compact("hist")                               # s5: file swap
+    lake.sql("DELETE FROM hist WHERE id = 3;")        # s4: delete file
+    lake.sql("INSERT INTO hist VALUES (4);")          # s5
+    lake.sql("DELETE FROM hist WHERE id = 4;")        # s6: retires the file
+    lake.sql("DELETE FROM hist WHERE id = 1;")        # s7: delete file
+    lake.compact("hist")                               # s8: file swap
     snaps_before = len(lake.catalog.snapshots())
     live_paths = set(
         lake.catalog.data_files(lake.catalog.table_id("hist"))["path"]
@@ -2510,8 +2513,10 @@ def test_array_ctas_and_dml(lake):
         "INSERT INTO emb SELECT vec_id + 100000, embedding, label "
         "FROM emb WHERE vec_id = 0"
     )
-    lake.sql("DELETE FROM emb WHERE vec_id >= 100000")
+    lake.sql("DELETE FROM emb WHERE vec_id >= 100000")  # retires the file
     assert lake.sql("SELECT count(*) AS n FROM emb").collect()[0]["n"] == n0
+    lake.sql("DELETE FROM emb WHERE vec_id = 1")  # a positional delete
+    assert lake.sql("SELECT count(*) AS n FROM emb").collect()[0]["n"] == n0 - 1
     d = lake.sql(
         "SELECT size(embedding) AS d FROM emb ORDER BY vec_id LIMIT 1"
     ).collect()[0]["d"]

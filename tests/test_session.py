@@ -66,3 +66,10 @@ def test_driver_memory_overrides_win_over_the_host_size(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert driver_memory() == "2g"
     assert driver_memory({"spark.driver.memory": "5g"}) == "5g"
+
+
+def test_tungsten_pages_are_one_mib(spark):
+    # not the page size Spark derives from the heap (several MiB): a page
+    # in use at a young collection would outgrow the survivor space
+    mm = spark.sparkContext._jsc.sc().env().memoryManager()
+    assert mm.pageSizeBytes() == 1024 * 1024

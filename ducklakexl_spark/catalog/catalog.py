@@ -488,43 +488,9 @@ class DuckLakeCatalog:
         self.commit_snapshot(f'created_schema:"{name}"', next_cat + 1, next_file)
         return schema_id
 
-    def _queue_live_files_for_gc(self, table_id: int) -> None:
-        """Append the table's live data/delete file paths to the
-        ducklake_files_scheduled_for_deletion queue so vacuum() can
-        reclaim them once their snapshots are expired.  Must run BEFORE
-        the rows are end-snapshotted (it reads the live mask)."""
-        gc_rows = []
-        for t in ("ducklake_data_file", "ducklake_delete_file"):
-            df = self.tables[t]
-            if df.empty:
-                continue
-            mask = self.live_mask(df) & (df["table_id"] == table_id)
-            for r in df[mask].itertuples():
-                gc_rows.append(
-                    {
-                        "data_file_id": int(
-                            getattr(r, "data_file_id", getattr(r, "delete_file_id", 0))
-                        ),
-                        "table_id": table_id,
-                        "path": r.path,
-                        "path_is_relative": False,
-                        "schedule_start": _now(),
-                    }
-                )
-        if gc_rows:
-            # a delete parquet can back several delete_file rows — queue
-            # each path once
-            seen: set[str] = set()
-            gc_rows = [
-                g for g in gc_rows
-                if g["path"] not in seen and not seen.add(g["path"])
-            ]
-            self._append("ducklake_files_scheduled_for_deletion", gc_rows)
-
     def drop_table(self, name: str) -> None:
         table_id = self.table_id(name)
         snapshot = self.current_snapshot + 1
-        self._queue_live_files_for_gc(table_id)
         for t in ("ducklake_table", "ducklake_column", "ducklake_data_file",
                   "ducklake_delete_file", "ducklake_inlined_data"):
             df = self.tables[t]
@@ -919,10 +885,9 @@ class DuckLakeCatalog:
     ) -> int:
         """Atomic file-set swap for compaction: the old data/delete file
         rows end at snapshot S and the new files begin at S — no snapshot
-        ever sees both (or neither).  Retired paths go to the
-        ducklake_files_scheduled_for_deletion GC queue."""
+        ever sees both (or neither).  The retired files stay on disk for
+        the older snapshots until ``expire_snapshots`` queues them."""
         snapshot = self.current_snapshot + 1
-        self._queue_live_files_for_gc(table_id)
         for t in ("ducklake_data_file", "ducklake_delete_file"):
             df = self.tables[t]
             if df.empty:
@@ -938,10 +903,10 @@ class DuckLakeCatalog:
         the current one): their rows leave ``ducklake_snapshot``, and any
         data/delete file whose validity ended at-or-before the retained
         horizon — invisible to every surviving snapshot — is dropped
-        from the catalog and queued for vacuum().  This is what makes
-        the GC queue safe to drain: a queued file can still back an
-        older snapshot until that snapshot is expired.  Also bounds
-        catalog metadata: dead file rows don't accumulate forever."""
+        from the catalog and queued for vacuum().  This is the only way
+        a file joins the GC queue, so vacuum() never removes a file that
+        a surviving snapshot reads.  Also bounds catalog metadata: dead
+        file rows don't accumulate forever."""
         snaps = self.tables["ducklake_snapshot"]
         cutoff = min(int(before_snapshot), self.current_snapshot)
         expired = snaps[snaps["snapshot_id"] < cutoff]
@@ -1209,7 +1174,6 @@ class DuckLakeCatalog:
     def truncate_table(self, name: str) -> int:
         table_id = self.table_id(name)
         snapshot = self.current_snapshot + 1
-        self._queue_live_files_for_gc(table_id)
         for t in (
             "ducklake_data_file",
             "ducklake_delete_file",

@@ -193,11 +193,6 @@ _INSERT_DEFAULTS_RE = re.compile(
 _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+([\w.\"]+)(?:\s+WHERE\s+(.*))?$", re.I | re.S
 )
-_DELETE_USING_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+([\w.\"]+)(?:\s+(?:AS\s+)?(\w+))?\s+"
-    r"USING\s+(\(.*?\)|[\w.\"]+)(?:\s+(?:AS\s+)?(\w+))?\s+WHERE\s+(.*)$",
-    re.I | re.S,
-)
 _UPDATE_RE = re.compile(
     r"^\s*UPDATE\s+([\w.\"]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$", re.I | re.S
 )
@@ -291,7 +286,47 @@ _MERGE_INSERT_ACTION_RE = re.compile(
 )
 
 
-def _parse_merge_clauses(actions: str) -> list[dict]:
+def _parse_set_list(
+    set_clause: str, columns: list[str], stmt: str
+) -> dict[str, str]:
+    """The ``SET`` list of every UPDATE form (UPDATE, UPDATE … FROM,
+    MERGE's UPDATE arms, ON CONFLICT DO UPDATE, UPDATE … RETURNING) as
+    {column: expression}.  ``(a, b) = (x, y)`` assigns pairwise; a target
+    may be quoted or qualified (``t.v``) and resolves case-insensitively
+    against ``columns``; an unknown column and ``(…) = (SELECT …)``
+    raise."""
+    by_lower = {c.lower(): c for c in columns}
+    out: dict[str, str] = {}
+    for part in split_top_level(set_clause):
+        lhs, rhs = (x.strip() for x in part.split("=", 1))
+        if lhs.startswith("("):
+            if re.match(r"(?is)^\(\s*SELECT\b", rhs):
+                raise NotImplementedError(
+                    f"{stmt} SET (…) = (SELECT …) is not supported"
+                )
+            targets = split_top_level(lhs[1:-1])
+            values = (
+                split_top_level(rhs[1:-1])
+                if rhs.startswith("(") and matching_paren(rhs, 0) == len(rhs) - 1
+                else [rhs]
+            )
+            if len(targets) != len(values):
+                raise ValueError(
+                    f"{stmt} SET tuple arity mismatch: {len(targets)} "
+                    f"columns, {len(values)} values"
+                )
+        else:
+            targets, values = [lhs], [rhs]
+        for target, value in zip(targets, values):
+            key = target.split(".")[-1].strip('"')
+            col = by_lower.get(key.lower())
+            if col is None:
+                raise ValueError(f"{stmt}: no column named {key!r}")
+            out[col] = value
+    return out
+
+
+def _parse_merge_clauses(actions: str, columns: list[str]) -> list[dict]:
     """Tokenize every WHEN clause of a MERGE, in order; raise on any
     clause the planner does not implement (a silently dropped clause
     would execute a partial merge).  Supported per the SQL shape:
@@ -299,7 +334,7 @@ def _parse_merge_clauses(actions: str) -> list[dict]:
     ``WHEN NOT MATCHED [BY TARGET] [AND cond] THEN INSERT
     [*|(cols) VALUES (…)]``, and ``WHEN NOT MATCHED BY SOURCE
     [AND cond] THEN UPDATE SET …|DELETE`` (target rows with no source
-    match)."""
+    match).  SET lists resolve against the target's ``columns``."""
     starts = [m.start() for m in _MERGE_CLAUSE_START_RE.finditer(actions)]
     if not starts or actions[: starts[0]].strip():
         raise ValueError(f"MERGE: unparsable WHEN clauses: {actions!r}")
@@ -320,27 +355,16 @@ def _parse_merge_clauses(actions: str) -> list[dict]:
         # the matched-style ones (UPDATE/DELETE), not INSERT
         matched = not is_not
         cl: dict = {"matched": matched, "cond": cond, "by_source": by_source}
-        if by_source and (u := _MERGE_UPDATE_ACTION_RE.match(act)):
+        if (matched or by_source) and (u := _MERGE_UPDATE_ACTION_RE.match(act)):
             cl["action"] = "update"
-            cl["assignments"] = {}
-            for part in split_top_level(u.group(1)):
-                k, v = part.split("=", 1)
-                cl["assignments"][k.strip().strip('"').split(".")[-1]] = v.strip()
-        elif by_source and _MERGE_DELETE_ACTION_RE.match(act):
+            cl["assignments"] = _parse_set_list(u.group(1), columns, "MERGE")
+        elif (matched or by_source) and _MERGE_DELETE_ACTION_RE.match(act):
             cl["action"] = "delete"
         elif by_source:
             raise ValueError(
                 f"MERGE: NOT MATCHED BY SOURCE allows UPDATE/DELETE "
                 f"only, got: {act!r}"
             )
-        elif matched and (u := _MERGE_UPDATE_ACTION_RE.match(act)):
-            cl["action"] = "update"
-            cl["assignments"] = {}
-            for part in split_top_level(u.group(1)):
-                k, v = part.split("=", 1)
-                cl["assignments"][k.strip().strip('"').split(".")[-1]] = v.strip()
-        elif matched and _MERGE_DELETE_ACTION_RE.match(act):
-            cl["action"] = "delete"
         elif not matched and _MERGE_INSERT_STAR_RE.match(act):
             cl["action"] = "insert_star"
         elif not matched and (ins := _MERGE_INSERT_ACTION_RE.match(act)):
@@ -6354,15 +6378,13 @@ class DuckLakeSpark:
                         # (no driver-side collect of the affected set)
                         hits = self.table_df(tname, snapshot=pre)
                         if where:
-                            hits = hits.filter(where)
+                            hits = hits.filter(apply_expr_dialect(where))
                         if um:
                             schema = self.table_schema(tname)
-                            assignments = {}
-                            for part in split_top_level(um.group(2)):
-                                col, expr = part.split("=", 1)
-                                assignments[col.strip().strip('"')] = (
-                                    expr.strip()
-                                )
+                            assignments = _parse_set_list(
+                                apply_expr_dialect(um.group(2)),
+                                schema.fieldNames(), kw,
+                            )
                             hits = hits.select(
                                 *[
                                     F.expr(assignments[f.name])
@@ -6457,9 +6479,8 @@ class DuckLakeSpark:
                 src = f"({source})"
             cond = " AND ".join(f"{name}.{k} = excluded.{k}" for k in keys)
             actions = "WHEN NOT MATCHED THEN INSERT *"
-            um = re.match(r"^UPDATE\s+SET\s+(.*)$", action, re.I | re.S)
-            if um:
-                actions += f" WHEN MATCHED THEN UPDATE SET {um.group(1)}"
+            if _MERGE_UPDATE_ACTION_RE.match(action):
+                actions += f" WHEN MATCHED THEN {action}"
             elif not re.match(r"^NOTHING\s*$", action, re.I):
                 raise ValueError(
                     f"ON CONFLICT: unsupported action {action!r}"
@@ -6493,38 +6514,26 @@ class DuckLakeSpark:
                 m.group(4),
                 by_name=bool(m.group(3)),
             )
-        m = _DELETE_USING_RE.match(stmt)
+        m = _DELETE_USING_RE.match(stmt) or _UPDATE_FROM_RE.match(stmt)
         if m:
-            tgt, talias, src, salias, collist, where = m.groups()
-            return self._delete_using(
-                tgt, talias, _aliased_source(src, salias, collist),
-                salias, where,
-            )
-        m = _DELETE_RE.match(stmt)
-        if m:
-            return self._delete(_unqualify(m.group(1)), m.group(2))
-        m = _UPDATE_FROM_RE.match(stmt)
-        if m:
-            # UPDATE … FROM (join update, DuckDB/Postgres) is MERGE's
-            # matched-update arm: same delete-file + append commit
-            tgt, talias, set_clause, src, salias, collist, where = m.groups()
+            # DELETE … USING and UPDATE … FROM (join mutations, DuckDB/
+            # Postgres) are MERGE's matched arms: same delete-file +
+            # append commit
+            if m.re is _DELETE_USING_RE:
+                tgt, talias, src, salias, collist, where = m.groups()
+                action = "DELETE"
+            else:
+                tgt, talias, set_clause, src, salias, collist, where = m.groups()
+                action = f"UPDATE SET {set_clause}"
             if salias is None and not src.startswith("("):
                 salias = _unqualify(src)  # bare name refs resolve as-is
             return self._merge(
                 tgt, talias, _aliased_source(src, salias, collist),
-                salias, where,
-                f"WHEN MATCHED THEN UPDATE SET {set_clause}",
+                salias, where, f"WHEN MATCHED THEN {action}",
             )
-        m = _DELETE_USING_RE.match(stmt)
+        m = _DELETE_RE.match(stmt)
         if m:
-            tgt, talias, src, salias, collist, where = m.groups()
-            if salias is None and not src.startswith("("):
-                salias = _unqualify(src)
-            return self._merge(
-                tgt, talias, _aliased_source(src, salias, collist),
-                salias, where,
-                "WHEN MATCHED THEN DELETE",
-            )
+            return self._delete(_unqualify(m.group(1)), m.group(2))
         m = _UPDATE_RE.match(stmt)
         if m:
             return self._update(_unqualify(m.group(1)), m.group(2), m.group(3))
@@ -7700,12 +7709,26 @@ class DuckLakeSpark:
         """Append the snapshot's live catalog-inlined rows to a table
         scan.  Inlined rows bypass file skipping (they have no file
         stats) and positional delete files (their deletes are MVCC
-        end_snapshot transitions); position columns carry a
-        ``__inlined__/<tid>`` marker + the spec row_id so DML can tell
-        them from file rows."""
+        end_snapshot transitions)."""
         inl = self.catalog.inlined_rows(tid, snapshot)
         if inl.empty:
             return df
+        return df.unionByName(
+            self._inlined_frame(inl, tid, snapshot, schema, with_position)
+        )
+
+    def _inlined_frame(
+        self,
+        inl: pd.DataFrame,
+        tid: int,
+        snapshot: int | None,
+        schema: T.StructType,
+        with_position: bool,
+    ) -> DataFrame:
+        """The catalog-inlined rows ``inl`` decoded as a frame of
+        ``schema`` (as of ``snapshot``); position columns carry a
+        ``__inlined__/<tid>`` marker + the spec row_id so DML can tell
+        them from file rows."""
         # a row's JSON keys are the column names live when it was
         # inlined: read each column under the name it had then, and a
         # column born after the row as its initial_default or NULL
@@ -7771,7 +7794,7 @@ class DuckLakeSpark:
                         F.col("__ibegin") < born, F.expr(dflt).cast(f.dataType)
                     ).otherwise(F.col(f.name)),
                 )
-        return df.unionByName(rows.drop("__ibegin"))
+        return rows.drop("__ibegin")
 
     def _generated_cols(
         self, tid: int, schema: T.StructType, snapshot: int | None = None
@@ -7822,21 +7845,12 @@ class DuckLakeSpark:
             inl = self.catalog.inlined_rows(tid)
             if inl.empty:
                 continue
-            schema = self.table_schema(t)
-            data = []
-            for r in inl.itertuples():
-                obj = json.loads(r.row_json)
-                data.append(
-                    {
-                        f.name: _inline_decode_value(
-                            obj.get(f.name), f.dataType
-                        )
-                        for f in schema.fields
-                    }
-                )
-            # bounded by the inlining limit per insert — one compact
-            # file is the whole point of flushing
-            df = self.spark.createDataFrame(data, schema).coalesce(1)
+            # decoded as a scan reads them (names as of each row's
+            # snapshot, initial defaults); bounded by the inlining limit
+            # per insert — one compact file is the whole point of flushing
+            df = self._inlined_frame(
+                inl, tid, None, self.table_schema(t), with_position=False
+            ).coalesce(1)
             files, col_stats = self._write_files(t, tid, df)
             # one atomic snapshot: end_inlined_rows stages at
             # current+1 and register_data_files commits that same id
@@ -7845,7 +7859,7 @@ class DuckLakeSpark:
             )
             if files:
                 self.catalog.register_data_files(tid, files, col_stats)
-            total += len(data)
+            total += len(inl)
         return total
 
     def _check_observer(self, tid: int, name: str, df: DataFrame):
@@ -8247,11 +8261,11 @@ class DuckLakeSpark:
     ) -> dict:
         """Small-file compaction (the OPTIMIZE/rewrite-data-files of other
         lakehouse formats): fold the table's live rows into
-        ``ceil(bytes/target)`` right-sized files, retire the old data +
-        delete files in the SAME snapshot the new files begin, and queue
-        the retired paths in ducklake_files_scheduled_for_deletion (the
-        spec's GC queue — old snapshots still reference them until
-        ``vacuum``).  At 100 TB this is the essential companion of
+        ``ceil(bytes/target)`` right-sized files and retire the old data +
+        delete files in the SAME snapshot the new files begin.  The old
+        files stay on disk for the older snapshots; ``expire_snapshots``
+        queues them for ``vacuum`` once no surviving snapshot reads
+        them.  At 100 TB this is the essential companion of
         streaming/frequent ingestion, which otherwise accretes a file per
         micro-batch per partition.
 
@@ -8377,8 +8391,8 @@ class DuckLakeSpark:
 
     def vacuum(self) -> int:
         """Physically delete every file in the GC queue and clear it.
-        After this, snapshots that referenced those files can no longer be
-        read — the standard expire-snapshots contract."""
+        Only ``expire_snapshots`` queues files, once no surviving
+        snapshot reads them, so every readable snapshot stays readable."""
         return self.catalog.vacuum()
 
     def table_changes(
@@ -9088,67 +9102,6 @@ class DuckLakeSpark:
 
     # ------------------------------------------------------------ DELETE/UPDATE
 
-    def _delete_using(
-        self,
-        target: str,
-        t_alias: str | None,
-        source: str,
-        s_alias: str | None,
-        cond: str,
-    ) -> None:
-        """``DELETE FROM t [AS a] USING s [AS b] WHERE cond`` (DuckDB/
-        Postgres join-delete): rows of t with ANY matching s row are
-        deleted — LEFT SEMI join semantics, so a target row never emits
-        duplicate delete positions however many source rows match.  The
-        commit shape is the ordinary positional-delete path (one delete
-        parquet per touched data file; untouched files unread)."""
-        name = _unqualify(target)
-        t_alias = t_alias or name
-        cond = apply_expr_dialect(cond)
-        if s_alias is None:
-            s_alias = (
-                _unqualify(source)
-                if re.match(r'^[\w."]+$', source.strip())
-                else "__del_src"
-            )
-        # positional deletes need file-backed rows (same as MERGE)
-        self.flush_inlined(name)
-        tid = self.catalog.table_id(name)
-        live = self.table_df(name, with_position=True)
-        sdf = (
-            self._select(source[1:-1])
-            if source.startswith("(")
-            else self._select(f"SELECT * FROM {_unqualify(source)}")
-        )
-        # join-DELETE only touches matching rows, so the target scan
-        # prunes to the source key range (same move as MERGE's MATCH)
-        pruned, preds = self._prune_by_source_bounds(
-            live, sdf, cond, t_alias, s_alias,
-            [f.name for f in self.table_schema(name).fields], sdf.columns,
-        )
-        scan_paths = None
-        if preds:
-            # catalog-level file skipping over the source bounds, same
-            # as MERGE's match branch: only files whose stats intersect
-            # the source key range are listed at all
-            pruned = self.table_df(name, with_position=True, predicates=preds)
-            scan_paths = self._last_scan_paths
-            for c, op, v in preds:
-                pruned = pruned.filter(
-                    F.col(c) >= F.lit(v) if op == ">=" else F.col(c) <= F.lit(v)
-                )
-        (pruned if pruned is not None else live).createOrReplaceTempView(
-            "__del_t"
-        )
-        sdf.createOrReplaceTempView("__del_s")
-        hit_pos = self.spark.sql(
-            f"SELECT {t_alias}.__file AS file_path, {t_alias}.__pos AS pos"
-            f" FROM __del_t {t_alias} WHERE EXISTS"
-            f" (SELECT 1 FROM __del_s {s_alias} WHERE {cond})"
-        )
-        self._register_deletes(name, tid, hit_pos, paths=scan_paths)
-        return None
-
     def _delete(self, name: str, where: str | None) -> None:
         """DELETE.  A data file whose statistics prove that every live row
         matches the whole WHERE (every file, without a WHERE) retires in
@@ -9377,37 +9330,9 @@ class DuckLakeSpark:
             preds = self._conjunct_predicates(where, cols, (name, None))
         live = self.table_df(name, with_position=True, predicates=preds)
         hits = live.filter(where) if where else live
-        # tuple form: SET (a, b) = (v1, v2) → a = v1, b = v2
-        tm = re.match(r"\s*\(([^()=]*)\)\s*=\s*\((.*)\)\s*$", set_clause, re.S)
-        if tm:
-            if re.match(r"(?is)^\s*SELECT\b", tm.group(2)):
-                raise NotImplementedError(
-                    "UPDATE SET (…) = (SELECT …) is not supported"
-                )
-            tcols = [c.strip() for c in tm.group(1).split(",")]
-            tvals = split_top_level(tm.group(2))
-            if len(tcols) != len(tvals):
-                raise ValueError(
-                    f"UPDATE SET tuple arity mismatch: {len(tcols)} "
-                    f"columns, {len(tvals)} values"
-                )
-            set_clause = ", ".join(
-                f"{c} = {v}" for c, v in zip(tcols, tvals)
-            )
-        # field-name resolution is case-insensitive, and an assignment
-        # to a non-existent column raises LOUDLY — the old exact-case
-        # dict lookup made both a silent no-op (round-6 probe find)
-        by_lower = {f.name.lower(): f.name for f in schema.fields}
-        assignments = {}
-        for part in split_top_level(set_clause):
-            col, expr = part.split("=", 1)
-            key = col.strip().strip('"')
-            actual = by_lower.get(key.lower())
-            if actual is None:
-                raise ValueError(
-                    f"UPDATE {name}: no column named {key!r}"
-                )
-            assignments[actual] = expr.strip()
+        assignments = _parse_set_list(
+            set_clause, schema.fieldNames(), f"UPDATE {name}"
+        )
         gen_names = {
             c
             for c, _x, _t in self._generated_cols(
@@ -9563,7 +9488,7 @@ class DuckLakeSpark:
         tid = self.catalog.table_id(name)
         schema = self.table_schema(name)
         cols = [f.name for f in schema.fields]
-        clauses = _parse_merge_clauses(actions)
+        clauses = _parse_merge_clauses(actions, cols)
         matched_cl = [c for c in clauses if c["matched"]]
         bysrc_cl = [c for c in clauses if c.get("by_source")]
         notm_cl = [
@@ -9612,76 +9537,54 @@ class DuckLakeSpark:
 
         new_parts: list[DataFrame] = []
         del_pos = None
-        if matched_cl:
-            # inner join target x source; first applicable clause per row
-            proj = [f"{t_alias}.{c} AS {c}" for c in cols]
-            proj += [
-                f"{t_alias}.__file AS __file",
-                f"{t_alias}.__pos AS __pos",
+        # WHEN MATCHED arms act on the (pruned) target x source join,
+        # NOT MATCHED BY SOURCE arms on the target rows with no source
+        # match (a left-anti join over the UNPRUNED scan): the same
+        # first-match-wins CASE over either relation.  A lone
+        # unconditional DELETE (DELETE … USING) reads no source column,
+        # so it joins LEFT SEMI: one row per target row however many
+        # source rows match it
+        lone = [(c["action"], c["cond"]) for c in matched_cl]
+        join = "LEFT SEMI JOIN" if lone == [("delete", None)] else "JOIN"
+        for arm_cl, relation in (
+            (matched_cl,
+             f"{matched_view} {t_alias} {join} __merge_s {s_alias} ON {cond}"),
+            (bysrc_cl,
+             f"(SELECT {t_alias}.* FROM __merge_t {t_alias} LEFT ANTI "
+             f"JOIN __merge_s {s_alias} ON {cond}) AS {t_alias}"),
+        ):
+            if not arm_cl:
+                continue
+            arms = " ".join(
+                f"WHEN {cl['cond'] or 'TRUE'} THEN {i}"
+                for i, cl in enumerate(arm_cl)
+            )
+            updates = [
+                (i, cl) for i, cl in enumerate(arm_cl) if cl["action"] == "update"
             ]
-            arms = []
-            for i, cl in enumerate(matched_cl):
-                arms.append(f"WHEN {cl['cond'] or 'TRUE'} THEN {i}")
-                if cl["action"] == "update":
-                    for c, expr in cl["assignments"].items():
-                        if c not in cols:
-                            raise ValueError(f"MERGE UPDATE: unknown column {c}")
-                        proj.append(f"({expr}) AS __u{i}_{c}")
-            matched = self.spark.sql(
-                f"SELECT {', '.join(proj)}, CASE {' '.join(arms)} ELSE -1 END"
-                f" AS __clause FROM {matched_view} {t_alias}"
-                f" JOIN __merge_s {s_alias} ON {cond}"
-            )
-            touched = matched.filter(F.col("__clause") >= 0)
-            touched = touched.localCheckpoint(eager=True)
-            del_pos = touched.select(
+            proj = [f"{t_alias}.{c} AS {c}" for c in cols + ["__file", "__pos"]]
+            proj += [
+                f"({expr}) AS __u{i}_{c}"
+                for i, cl in updates
+                for c, expr in cl["assignments"].items()
+            ]
+            touched = self.spark.sql(
+                f"SELECT {', '.join(proj)}, CASE {arms} ELSE -1 END"
+                f" AS __clause FROM {relation}"
+            ).filter(F.col("__clause") >= 0)
+            if updates:
+                # the delete positions and the UPDATE rows must read the
+                # same touched rows: materialize them once
+                touched = touched.localCheckpoint(eager=True)
+            pos = touched.select(
                 F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
             )
-            for i, cl in enumerate(matched_cl):
-                if cl["action"] != "update":
-                    continue
-                upd = touched.filter(F.col("__clause") == i).select(
-                    *[
-                        F.col(f"__u{i}_{c}").alias(c)
-                        if c in cl["assignments"]
-                        else F.col(c)
-                        for c in cols
-                    ]
-                )
-                new_parts.append(upd)
-
-        if bysrc_cl:
-            # target rows with no source match: same first-match-wins
-            # CASE machinery over a left-anti join (one co-partitioned
-            # shuffle on the join key; no row explosion possible)
-            proj = [c for c in cols] + ["__file", "__pos"]
-            arms = []
-            for i, cl in enumerate(bysrc_cl):
-                arms.append(f"WHEN {cl['cond'] or 'TRUE'} THEN {i}")
-                if cl["action"] == "update":
-                    for c, expr in cl["assignments"].items():
-                        if c not in cols:
-                            raise ValueError(f"MERGE UPDATE: unknown column {c}")
-                        proj.append(f"({expr}) AS __s{i}_{c}")
-            unmatched_t = self.spark.sql(
-                f"SELECT {', '.join(proj)}, CASE {' '.join(arms)} ELSE -1 END"
-                f" AS __clause FROM (SELECT {t_alias}.* FROM __merge_t"
-                f" {t_alias} LEFT ANTI JOIN __merge_s {s_alias} ON {cond})"
-                f" AS {t_alias}"
-            )
-            touched_src = unmatched_t.filter(F.col("__clause") >= 0)
-            touched_src = touched_src.localCheckpoint(eager=True)
-            src_del = touched_src.select(
-                F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
-            )
-            del_pos = src_del if del_pos is None else del_pos.unionAll(src_del)
-            for i, cl in enumerate(bysrc_cl):
-                if cl["action"] != "update":
-                    continue
+            del_pos = pos if del_pos is None else del_pos.unionAll(pos)
+            for i, cl in updates:
                 new_parts.append(
-                    touched_src.filter(F.col("__clause") == i).select(
+                    touched.filter(F.col("__clause") == i).select(
                         *[
-                            F.col(f"__s{i}_{c}").alias(c)
+                            F.col(f"__u{i}_{c}").alias(c)
                             if c in cl["assignments"]
                             else F.col(c)
                             for c in cols

@@ -73,6 +73,10 @@ def _script(tbl: str) -> list[str]:
             f"UPDATE {tbl} SET s = upper(s) WHERE v > {rng.randint(0, 99)}",
             f"UPDATE {tbl} SET v = -v, s = s || '_m' "
             f"WHERE v < {rng.randint(-20, 20)}",
+            f"UPDATE {tbl} SET V = v - {rng.randint(1, 9)} "
+            f"WHERE k % {rng.randint(2, 5)} = 0",
+            f"UPDATE {tbl} SET (v, S) = (v * 2, s || '_t') "
+            f"WHERE v > {rng.randint(0, 99)}",
         ])
 
     def op_point_cycle() -> list[str]:
@@ -114,8 +118,14 @@ def _script(tbl: str) -> list[str]:
     def op_update_from() -> str:
         ks = rng.sample(range(next_k[0] + 4), k=min(3, next_k[0]))
         vals = ", ".join(f"({k2}, {rng.randint(-9, 9)})" for k2 in ks)
+        set_list = rng.choice([
+            f"v = {tbl}.v + d.dv",
+            f"V = {tbl}.v - d.dv",
+            f"(v, s) = ({tbl}.v * d.dv, {tbl}.s || '_f')",
+            "(V) = (d.dv)",
+        ])
         return (
-            f"UPDATE {tbl} SET v = {tbl}.v + d.dv "
+            f"UPDATE {tbl} SET {set_list} "
             f"FROM (VALUES {vals}) d(k, dv) WHERE {tbl}.k = d.k"
         )
 
@@ -231,10 +241,15 @@ def _pk_script(tbl: str) -> list[str]:
 
     def op_upsert_update() -> str:
         k2, v2, s2 = keyval()
+        set_list = rng.choice([
+            "v = excluded.v, s = excluded.s",
+            "V = excluded.v, S = excluded.s",
+            "(v, s) = (excluded.v, excluded.s)",
+            "(S) = (excluded.s)",
+        ])
         return (
             f"INSERT INTO {tbl} VALUES ({k2}, {v2}, '{s2}{k2}') "
-            f"ON CONFLICT (k) DO UPDATE SET v = excluded.v, "
-            f"s = excluded.s"
+            f"ON CONFLICT (k) DO UPDATE SET {set_list}"
         )
 
     def op_upsert_nothing() -> str:

@@ -496,6 +496,14 @@ def test_compact_and_vacuum(lake):
     rec = int(stats.loc[stats["table_id"] == tid, "record_count"].iloc[0])
     assert rec == len(before)
 
+    # compaction queues nothing: the pre-compact snapshot still reads
+    # its files after a vacuum, until expire_snapshots queues them
+    removed = lake.vacuum()
+    assert sorted(
+        tuple(r) for r in lake.table("c", snapshot=snap_before).collect()
+    ) == before
+    assert removed == 0
+    lake.expire_snapshots(before_version=lake.catalog.current_snapshot)
     removed = lake.vacuum()
     assert removed >= 4
     # current snapshot unaffected by vacuum
@@ -978,20 +986,30 @@ def test_insert_partial_column_list_fills_null(lake):
 
 
 def test_truncate_and_drop_feed_gc_queue(lake):
+    """TRUNCATE and DROP queue nothing themselves: the snapshot before
+    each still reads its files after a vacuum.  expire_snapshots queues
+    the files once no surviving snapshot reads them."""
     lake.sql("USE db")
     lake.sql("CREATE TABLE t(id INTEGER)")
     lake.sql("INSERT INTO t VALUES (1), (2)")
+    pre_truncate = lake.catalog.current_snapshot
+    lake.sql("TRUNCATE t")
+    removed = lake.catalog.vacuum()
+    assert rows(lake.table("t", snapshot=pre_truncate)) == [(1,), (2,)]
+    assert removed == 0
+    lake.sql("INSERT INTO t VALUES (3)")
+    pre_drop = lake.catalog.current_snapshot
+    lake.sql("DROP TABLE t")
+    removed = lake.catalog.vacuum()
+    assert rows(lake.table("t", snapshot=pre_drop)) == [(3,)]
+    assert removed == 0
     q = lake.catalog.tables["ducklake_files_scheduled_for_deletion"]
     assert len(q) == 0
-    lake.sql("TRUNCATE t")
+    lake.expire_snapshots(before_version=lake.catalog.current_snapshot)
     q = lake.catalog.tables["ducklake_files_scheduled_for_deletion"]
-    assert len(q) >= 1
-    lake.sql("INSERT INTO t VALUES (3)")
-    lake.sql("DROP TABLE t")
-    q2 = lake.catalog.tables["ducklake_files_scheduled_for_deletion"]
-    assert len(q2) > len(q)
+    assert len(q) >= 2
     removed = lake.catalog.vacuum()
-    assert removed == len(q2)
+    assert removed == len(q)
 
 
 def test_no_stale_or_foreign_view_answers_for_a_missing_table(
@@ -1923,7 +1941,9 @@ def test_maintenance_statements(lake):
     assert lake.sql("CHECKPOINT") is None
     res = rows(lake.sql("CALL ducklake_merge_adjacent_files('mt')"))
     assert res[0][0] == "mt" and "'compacted': True" in res[0][1]
-    lake.sql("CALL ducklake_expire_snapshots(before_version => 4)")
+    # snapshot 4 (the last insert) is the last to read the three
+    # pre-compaction single-row files: expiring it queues them
+    lake.sql("CALL ducklake_expire_snapshots(before_version => 5)")
     deleted = rows(lake.sql("VACUUM"))[0][0]
     assert deleted == 3  # the three pre-compaction single-row files
     assert lake.sql("SELECT * FROM mt").count() == 3

@@ -14,10 +14,17 @@ spec schemas, committed atomically through :class:`CatalogStore`.
 bumps that table's change number, and every in-place edit here calls
 ``tables.touch``.  The store writes and the workbook sync serializes only
 the tables whose numbers moved, so a statement pays for what it changed.
+
+One statement, one snapshot (:meth:`DuckLakeCatalog.statement`): its
+changes land in one snapshot, committed with one ``changes_made`` row
+and one save.  A mutator called outside a statement is its own.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import os
 import uuid
 from datetime import datetime, timezone
 
@@ -45,6 +52,42 @@ def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
+def _remove_path(path: str) -> None:
+    """Remove a data file or a delete file, which is a directory."""
+    if iofs.has_scheme(path) or os.path.isdir(path):
+        # remote GC targets are insert-/delete- directories
+        iofs.rmtree(path, ignore_errors=False)
+    else:
+        iofs.remove(path)
+
+
+def _tag_table(object_id: int, column_id: int | None) -> tuple[str, dict]:
+    """The tag table of an object or a column, and its key columns."""
+    if column_id is None:
+        return "ducklake_tag", {"object_id": object_id}
+    return "ducklake_column_tag", {"table_id": object_id, "column_id": column_id}
+
+
+def _tag_mask(df: pd.DataFrame, ids: dict, key: str):
+    mask = df["key"] == key
+    for col, v in ids.items():
+        mask &= df[col] == v
+    return mask
+
+
+def _statement(method):
+    """Run a catalog method inside :meth:`DuckLakeCatalog.statement`: on
+    its own it commits once; inside a caller's statement it joins that
+    statement's snapshot."""
+
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        with self.statement():
+            return method(self, *args, **kwargs)
+
+    return run
+
+
 class DuckLakeCatalog:
     def __init__(
         self, store: CatalogStore, data_path: str, encrypted: bool = False
@@ -52,7 +95,14 @@ class DuckLakeCatalog:
         self.store = store
         self.data_path = data_path
         self._txn_backup: CatalogTables | None = None
-        self._txn_files: list[str] = []
+        # data and delete files registered since the last save
+        self._new_files: list[str] = []
+        # the open statement: nesting depth, the snapshot id its first
+        # change opened, its change tokens, and whether it needs a save
+        self._depth = 0
+        self._sid: int | None = None
+        self._changes: list[str] = []
+        self._unsaved = False
         created = False
         if not store.exists():
             if read_manifest(store.path + ".old") is not None:
@@ -110,7 +160,6 @@ class DuckLakeCatalog:
         if self._txn_backup is not None:
             raise ValueError("already in a transaction")
         self._txn_backup = self.tables.copy()  # frames and change numbers
-        self._txn_files = []
 
     def in_txn(self) -> bool:
         return self._txn_backup is not None
@@ -120,7 +169,6 @@ class DuckLakeCatalog:
         if self._txn_backup is None:
             return  # autocommit mode: COMMIT is a no-op
         self._txn_backup = None
-        self._txn_files = []
         self._checked_save()
 
     def rollback_txn(self) -> None:
@@ -131,17 +179,55 @@ class DuckLakeCatalog:
             return
         self.tables = self._txn_backup
         self._txn_backup = None
-        for p in self._txn_files:
-            try:
-                iofs.remove(p)
-            except FileNotFoundError:
-                pass
-        self._txn_files = []
+        self._remove_new_files()
+
+    def _remove_new_files(self) -> None:
+        """Delete the files registered since the last save, which no
+        saved snapshot references; files adopted from outside the data
+        path are not the lake's to delete."""
+        own = os.path.join(self.data_path, "")
+        for p in self._new_files:
+            if p.startswith(own):
+                with contextlib.suppress(OSError):
+                    _remove_path(p)
+        self._new_files = []
 
     def _save(self) -> None:
         """Persist unless inside a transaction (deferred to COMMIT)."""
         if self._txn_backup is None:
             self._checked_save()
+
+    @contextlib.contextmanager
+    def statement(self):
+        """One statement: every change made inside lands in one snapshot,
+        committed with one save when the outermost statement ends.  A
+        statement that raises commits nothing: outside a transaction the
+        catalog falls back to the store and the files the statement
+        wrote are deleted; inside one, the changes already made stay in
+        memory under their own snapshot."""
+        self._depth += 1
+        try:
+            yield
+            if self._depth == 1:
+                self._end_statement()
+        except BaseException as exc:
+            if self._depth == 1:
+                if self.in_txn():
+                    self._end_statement()
+                elif isinstance(exc, Exception):
+                    self._remove_new_files()
+                    self.refresh()
+            raise
+        finally:
+            self._depth -= 1
+            if not self._depth:
+                self._sid, self._changes, self._unsaved = None, [], False
+
+    def _end_statement(self) -> None:
+        if self._sid is not None:
+            self.commit_snapshot()
+        elif self._unsaved:
+            self._save()
 
     def _checked_save(self) -> None:
         """Optimistic concurrency: refuse to clobber a commit another
@@ -164,6 +250,7 @@ class DuckLakeCatalog:
                 )
             self.store.save(self.tables)
         self._base_snapshot = self.current_snapshot
+        self._new_files = []
 
     # -- low-level helpers --------------------------------------------------
 
@@ -249,42 +336,45 @@ class DuckLakeCatalog:
     def current_snapshot(self) -> int:
         return int(self.tables["ducklake_snapshot"]["snapshot_id"].max())
 
-    def _counters(self) -> tuple[int, int]:
-        snap = self.tables["ducklake_snapshot"]
-        last = snap.loc[snap["snapshot_id"].idxmax()]
-        next_cat = int(last["next_catalog_id"])
-        next_file = int(last["next_file_id"])
-        # staged-but-uncommitted rows (register_* with commit=False) have
-        # already consumed file ids beyond the last snapshot's counter —
-        # never re-allocate those
-        d = self.tables["ducklake_data_file"]
-        if not d.empty:
-            next_file = max(next_file, int(d["data_file_id"].max()) + 1)
-        dl = self.tables["ducklake_delete_file"]
-        if not dl.empty:
-            next_file = max(next_file, int(dl["delete_file_id"].max()) + 1)
-        return next_cat, next_file
+    def _change(self, token: str) -> int:
+        """Record one change of the open statement and return the id of
+        the snapshot it lands in.  The statement's first change appends
+        that snapshot's row, with the last snapshot's id counters, so
+        reads inside the statement see its own changes."""
+        if self._sid is None:
+            if not self._depth:
+                raise RuntimeError("catalog change outside a statement")
+            snap = self.tables["ducklake_snapshot"]
+            row = snap.loc[snap["snapshot_id"].idxmax()].to_dict()
+            self._sid = self.current_snapshot + 1
+            row.update(snapshot_id=self._sid, snapshot_time=_now())
+            self._append("ducklake_snapshot", [row])
+        if token not in self._changes:
+            self._changes.append(token)
+        return self._sid
 
-    def commit_snapshot(
-        self, changes: str, next_catalog_id: int, next_file_id: int
-    ) -> int:
-        sid = self.current_snapshot + 1
-        self._append(
-            "ducklake_snapshot",
-            [
-                {
-                    "snapshot_id": sid,
-                    "snapshot_time": _now(),
-                    "schema_version": 0,
-                    "next_catalog_id": next_catalog_id,
-                    "next_file_id": next_file_id,
-                }
-            ],
-        )
+    def _take_ids(self, n_cat: int = 0, n_file: int = 0) -> tuple[int, int]:
+        """Take ``n_cat`` catalog ids and ``n_file`` file ids from the open
+        snapshot's counters; returns the first id of each."""
+        snap = self.tables["ducklake_snapshot"]
+        row = snap.index[snap["snapshot_id"] == self._sid][0]
+        cols = ["next_catalog_id", "next_file_id"]
+        cat, fid = (int(v) for v in snap.loc[row, cols])
+        snap.loc[row, cols] = [cat + n_cat, fid + n_file]
+        return cat, fid
+
+    def commit_snapshot(self) -> int:
+        """Commit the open statement's snapshot: its commit time, one
+        ``changes_made`` row listing every change, and one save."""
+        sid = self._sid
+        snap = self.tables["ducklake_snapshot"]
+        snap.loc[snap["snapshot_id"] == sid, "snapshot_time"] = _now()
+        self.tables.touch("ducklake_snapshot")
         self._append(
             "ducklake_snapshot_changes",
-            [{"snapshot_id": sid, "changes_made": changes}],
+            [{"snapshot_id": sid, "changes_made": ",".join(self._changes)}],
         )
+        self._sid = None
         self._save()
         return sid
 
@@ -338,16 +428,15 @@ class DuckLakeCatalog:
 
     # -- DDL ---------------------------------------------------------------------
 
+    @_statement
     def create_table(self, name: str, columns: list[tuple]) -> int:
         """columns: [(name, ducklake SQL type[, nulls_allowed, default])]
         — returns table_id."""
         live = self.live("ducklake_table")
         if (live["table_name"] == name).any():
             raise ValueError(f"table already exists: {name}")
-        next_cat, next_file = self._counters()
-        table_id = next_cat
-        next_cat += 1
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f'created_table:"{name}"')
+        table_id, _ = self._take_ids(1 + len(columns))
         self._append(
             "ducklake_table",
             [
@@ -368,7 +457,7 @@ class DuckLakeCatalog:
             default = cdef[3] if len(cdef) > 3 else None
             col_rows.append(
                 {
-                    "column_id": next_cat,
+                    "column_id": table_id + 1 + order,
                     "begin_snapshot": snapshot,
                     "end_snapshot": None,
                     "table_id": table_id,
@@ -381,7 +470,6 @@ class DuckLakeCatalog:
                     "parent_column": None,
                 }
             )
-            next_cat += 1
         self._append("ducklake_column", col_rows)
         self._append(
             "ducklake_table_stats",
@@ -394,9 +482,9 @@ class DuckLakeCatalog:
                 }
             ],
         )
-        self.commit_snapshot(f'created_table:"{name}"', next_cat, next_file)
         return table_id
 
+    @_statement
     def create_view(self, name: str, sql: str, replace: bool = False) -> int:
         """Register a SQL view in ducklake_view (dialect 'spark'); the
         engine re-resolves the text at read time, so views always see the
@@ -406,10 +494,9 @@ class DuckLakeCatalog:
         if not exists.empty:
             if not replace:
                 raise ValueError(f"view already exists: {name}")
-            self.drop_view(name, _commit=False)
-        next_cat, next_file = self._counters()
-        view_id = next_cat
-        snapshot = self.current_snapshot + 1
+            self.drop_view(name)
+        snapshot = self._change(f'created_view:"{name}"')
+        view_id, _ = self._take_ids(1)
         self._append(
             "ducklake_view",
             [
@@ -426,18 +513,16 @@ class DuckLakeCatalog:
                 }
             ],
         )
-        self.commit_snapshot(f'created_view:"{name}"', next_cat + 1, next_file)
         return view_id
 
-    def drop_view(self, name: str, _commit: bool = True) -> None:
+    @_statement
+    def drop_view(self, name: str) -> None:
         df = self.tables["ducklake_view"]
         mask = self.live_mask(df) & (df["view_name"] == name)
         if not mask.any():
             raise KeyError(f"view not found: {name}")
-        self._end_rows("ducklake_view", mask, self.current_snapshot + 1)
-        if _commit:
-            next_cat, next_file = self._counters()
-            self.commit_snapshot(f'dropped_view:"{name}"', next_cat, next_file)
+        snapshot = self._change(f'dropped_view:"{name}"')
+        self._end_rows("ducklake_view", mask, snapshot)
 
     def view_names(self, snapshot: int | None = None) -> list[str]:
         return list(self.live("ducklake_view", snapshot)["view_name"])
@@ -449,6 +534,7 @@ class DuckLakeCatalog:
             raise KeyError(f"view not found: {name}")
         return str(hit.iloc[0]["sql"])
 
+    @_statement
     def rename_table(self, old: str, new: str) -> None:
         """ALTER TABLE … RENAME TO …: MVCC row swap — the old name row
         ends, a new row with the SAME table_id begins, so data files and
@@ -456,7 +542,7 @@ class DuckLakeCatalog:
         old snapshots."""
         table_id = self.table_id(old)
         df = self.tables["ducklake_table"]
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f'renamed_table:"{old}"->"{new}"')
         mask = self.live_mask(df) & (df["table_id"] == table_id)
         old_row = df[mask].iloc[0].to_dict()
         self._end_rows("ducklake_table", mask, snapshot)
@@ -464,33 +550,32 @@ class DuckLakeCatalog:
             {"begin_snapshot": snapshot, "end_snapshot": None, "table_name": new}
         )
         self._append("ducklake_table", [old_row])
-        next_cat, next_file = self._counters()
-        self.commit_snapshot(f'renamed_table:"{old}"->"{new}"', next_cat, next_file)
 
+    @_statement
     def create_schema(self, name: str) -> int:
         live = self.live("ducklake_schema")
         if (live["schema_name"] == name).any():
             raise ValueError(f"schema already exists: {name}")
-        next_cat, next_file = self._counters()
-        schema_id = next_cat
+        snapshot = self._change(f'created_schema:"{name}"')
+        schema_id, _ = self._take_ids(1)
         self._append(
             "ducklake_schema",
             [
                 {
                     "schema_id": schema_id,
                     "schema_uuid": str(uuid.uuid4()),
-                    "begin_snapshot": self.current_snapshot + 1,
+                    "begin_snapshot": snapshot,
                     "end_snapshot": None,
                     "schema_name": name,
                 }
             ],
         )
-        self.commit_snapshot(f'created_schema:"{name}"', next_cat + 1, next_file)
         return schema_id
 
+    @_statement
     def drop_table(self, name: str) -> None:
         table_id = self.table_id(name)
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f'dropped_table:"{name}"')
         for t in ("ducklake_table", "ducklake_column", "ducklake_data_file",
                   "ducklake_delete_file", "ducklake_inlined_data"):
             df = self.tables[t]
@@ -498,8 +583,6 @@ class DuckLakeCatalog:
                 continue
             mask = self.live_mask(df) & (df["table_id"] == table_id)
             self._end_rows(t, mask, snapshot)
-        next_cat, next_file = self._counters()
-        self.commit_snapshot(f'dropped_table:"{name}"', next_cat, next_file)
 
     # -- schema evolution --------------------------------------------------------
 
@@ -510,6 +593,7 @@ class DuckLakeCatalog:
             raise KeyError(f"column not found: {name}")
         return hit.iloc[0]
 
+    @_statement
     def add_column(
         self, table_id: int, name: str, col_type: str, default: str | None = None
     ) -> int:
@@ -521,13 +605,13 @@ class DuckLakeCatalog:
         cols = self.columns(table_id)
         if (cols["column_name"] == name).any():
             raise ValueError(f"column already exists: {name}")
-        next_cat, next_file = self._counters()
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f"altered_table:{table_id}:add_column:{name}")
+        column_id, _ = self._take_ids(1)
         self._append(
             "ducklake_column",
             [
                 {
-                    "column_id": next_cat,
+                    "column_id": column_id,
                     "begin_snapshot": snapshot,
                     "end_snapshot": None,
                     "table_id": table_id,
@@ -543,10 +627,9 @@ class DuckLakeCatalog:
                 }
             ],
         )
-        return self.commit_snapshot(
-            f"altered_table:{table_id}:add_column:{name}", next_cat + 1, next_file
-        )
+        return snapshot
 
+    @_statement
     def drop_column(self, table_id: int, name: str) -> int:
         """End-snapshot the column row; data files keep the physical
         column, scans stop projecting it — instant at any table size.
@@ -562,15 +645,13 @@ class DuckLakeCatalog:
                 "the live partition scheme (SET PARTITIONED BY a new "
                 "scheme first)"
             )
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f"altered_table:{table_id}:drop_column:{name}")
         df = self.tables["ducklake_column"]
         mask = self.live_mask(df) & (df["column_id"] == int(row["column_id"]))
         self._end_rows("ducklake_column", mask, snapshot)
-        next_cat, next_file = self._counters()
-        return self.commit_snapshot(
-            f"altered_table:{table_id}:drop_column:{name}", next_cat, next_file
-        )
+        return snapshot
 
+    @_statement
     def _transition_column(
         self, table_id: int, name: str, changes: dict, message: str
     ) -> int:
@@ -578,7 +659,7 @@ class DuckLakeCatalog:
         column_id — the MVCC shape for rename/retype (time travel sees
         the old definition through the old row)."""
         row = self._column_row(table_id, name)
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(message)
         df = self.tables["ducklake_column"]
         mask = self.live_mask(df) & (df["column_id"] == int(row["column_id"]))
         self._end_rows("ducklake_column", mask, snapshot)
@@ -587,8 +668,7 @@ class DuckLakeCatalog:
         }
         new_row.update(begin_snapshot=snapshot, end_snapshot=None, **changes)
         self._append("ducklake_column", [new_row])
-        next_cat, next_file = self._counters()
-        return self.commit_snapshot(message, next_cat, next_file)
+        return snapshot
 
     def rename_column(self, table_id: int, old: str, new: str) -> int:
         cols = self.columns(table_id)
@@ -601,6 +681,7 @@ class DuckLakeCatalog:
             f"altered_table:{table_id}:rename_column:{old}:{new}",
         )
 
+    @_statement
     def set_metadata(self, key: str, value: str | None) -> None:
         """Upsert (or delete, when value is None) a ducklake_metadata
         k/v row — engine-level registry entries like enum types."""
@@ -610,7 +691,7 @@ class DuckLakeCatalog:
         )
         if value is not None:
             self._append("ducklake_metadata", [{"key": key, "value": value}])
-        self._save()
+        self._unsaved = True
 
     def set_column_default(
         self, table_id: int, name: str, default: str | None
@@ -646,65 +727,34 @@ class DuckLakeCatalog:
 
     # -- tags --------------------------------------------------------------------
 
+    @_statement
     def set_tag(
         self,
         object_id: int,
         key: str,
         value: str,
         column_id: int | None = None,
-        commit: bool = True,
     ) -> None:
         """MVCC tag upsert: old value (if any) ends at the snapshot the
         new one begins (ducklake_tag / ducklake_column_tag spec tables —
-        COMMENT ON maps to key='comment').
-
-        ``commit=False`` stages the tag rows against the NEXT snapshot
-        without committing, so a caller can fold the tag into its own
-        upcoming commit (one atomic snapshot — used by the streaming sink
-        to publish data files and the epoch watermark together)."""
-        snapshot = self.current_snapshot + 1
-        if column_id is None:
-            df = self.tables["ducklake_tag"]
-            mask = (
-                self.live_mask(df) & (df["object_id"] == object_id)
-                & (df["key"] == key)
-            )
-            self._end_rows("ducklake_tag", mask, snapshot)
-            self._append(
-                "ducklake_tag",
-                [
-                    {
-                        "object_id": object_id,
-                        "begin_snapshot": snapshot,
-                        "end_snapshot": None,
-                        "key": key,
-                        "value": value,
-                    }
-                ],
-            )
-        else:
-            df = self.tables["ducklake_column_tag"]
-            mask = (
-                self.live_mask(df) & (df["table_id"] == object_id)
-                & (df["column_id"] == column_id) & (df["key"] == key)
-            )
-            self._end_rows("ducklake_column_tag", mask, snapshot)
-            self._append(
-                "ducklake_column_tag",
-                [
-                    {
-                        "table_id": object_id,
-                        "column_id": column_id,
-                        "begin_snapshot": snapshot,
-                        "end_snapshot": None,
-                        "key": key,
-                        "value": value,
-                    }
-                ],
-            )
-        if commit:
-            next_cat, next_file = self._counters()
-            self.commit_snapshot(f"set_tag:{object_id}:{key}", next_cat, next_file)
+        COMMENT ON maps to key='comment')."""
+        snapshot = self._change(f"set_tag:{object_id}:{key}")
+        table, ids = _tag_table(object_id, column_id)
+        df = self.tables[table]
+        mask = self.live_mask(df) & _tag_mask(df, ids, key)
+        self._end_rows(table, mask, snapshot)
+        self._append(
+            table,
+            [
+                {
+                    **ids,
+                    "begin_snapshot": snapshot,
+                    "end_snapshot": None,
+                    "key": key,
+                    "value": value,
+                }
+            ],
+        )
 
     def get_tag(
         self,
@@ -713,20 +763,14 @@ class DuckLakeCatalog:
         column_id: int | None = None,
         snapshot: int | None = None,
     ) -> str | None:
-        if column_id is None:
-            live = self.live("ducklake_tag", snapshot)
-            hit = live[(live["object_id"] == object_id) & (live["key"] == key)]
-        else:
-            live = self.live("ducklake_column_tag", snapshot)
-            hit = live[
-                (live["table_id"] == object_id)
-                & (live["column_id"] == column_id)
-                & (live["key"] == key)
-            ]
+        table, ids = _tag_table(object_id, column_id)
+        live = self.live(table, snapshot)
+        hit = live[_tag_mask(live, ids, key)]
         return None if hit.empty else str(hit.iloc[0]["value"])
 
     # -- partitioning ------------------------------------------------------------
 
+    @_statement
     def set_partitioned_by(
         self,
         table_id: int,
@@ -747,13 +791,12 @@ class DuckLakeCatalog:
             transforms = ["identity"] * len(column_ids)
         if len(transforms) != len(column_ids):
             raise ValueError("transforms must parallel column_ids")
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f"set_partitioned_by:{table_id}")
         info = self.tables["ducklake_partition_info"]
         if not info.empty:
             mask = self.live_mask(info) & (info["table_id"] == table_id)
             self._end_rows("ducklake_partition_info", mask, snapshot)
-        next_cat, next_file = self._counters()
-        partition_id = next_cat
+        partition_id, _ = self._take_ids(1)
         self._append(
             "ducklake_partition_info",
             [
@@ -778,7 +821,6 @@ class DuckLakeCatalog:
                 for i, cid in enumerate(column_ids)
             ],
         )
-        self.commit_snapshot(f"set_partitioned_by:{table_id}", next_cat + 1, next_file)
         return partition_id
 
     def partition_scheme(
@@ -799,17 +841,17 @@ class DuckLakeCatalog:
 
     # -- file registration (DML support) -------------------------------------------
 
+    @_statement
     def register_data_files(
         self, table_id: int, files: list[dict], column_stats: list[dict] | None = None
     ) -> int:
         """Register newly written parquet files.  Each file dict needs:
         path, record_count, file_size_bytes, footer_size.
         column_stats rows (optional): per (path, column_id) min/max/nulls.
-        Returns the commit snapshot id."""
-        if self._txn_backup is not None:
-            self._txn_files += [f["path"] for f in files]
-        next_cat, next_file = self._counters()
-        snapshot = self.current_snapshot + 1
+        Returns the snapshot id the files begin at."""
+        self._new_files += [f["path"] for f in files]
+        snapshot = self._change(f"inserted_into_table:{table_id}")
+        _, next_file = self._take_ids(n_file=len(files))
         stats = self.tables["ducklake_table_stats"]
         srow = stats[stats["table_id"] == table_id]
         next_row_id = int(srow.iloc[0]["next_row_id"]) if not srow.empty else 0
@@ -876,19 +918,21 @@ class DuckLakeCatalog:
         added = sum(int(f["record_count"]) for f in files)
         added_bytes = sum(int(f["file_size_bytes"]) for f in files)
         self._bump_table_stats(table_id, added, next_row_id, added_bytes)
-        return self.commit_snapshot(
-            f"inserted_into_table:{table_id}", next_cat, next_file
-        )
+        return snapshot
 
+    @_statement
     def replace_table_files(
         self, table_id: int, files: list[dict], column_stats: list[dict] | None
     ) -> int:
         """Atomic file-set swap for compaction: the old data/delete file
-        rows end at snapshot S and the new files begin at S — no snapshot
-        ever sees both (or neither).  The retired files stay on disk for
-        the older snapshots until ``expire_snapshots`` queues them."""
-        snapshot = self.current_snapshot + 1
-        for t in ("ducklake_data_file", "ducklake_delete_file"):
+        rows and inlined rows end at snapshot S and the new files begin
+        at S — no snapshot ever sees both (or neither).  The retired
+        files stay on disk for the older snapshots until
+        ``expire_snapshots`` queues them."""
+        snapshot = self._change(f"compacted_table:{table_id}")
+        for t in (
+            "ducklake_data_file", "ducklake_delete_file", "ducklake_inlined_data"
+        ):
             df = self.tables[t]
             if df.empty:
                 continue
@@ -898,6 +942,7 @@ class DuckLakeCatalog:
         self._edit_stats(table_id, record_count=0, file_size_bytes=0)
         return self.register_data_files(table_id, files, column_stats)
 
+    @_statement
     def expire_snapshots(self, before_snapshot: int) -> dict:
         """Expire every snapshot older than ``before_snapshot`` (never
         the current one): their rows leave ``ducklake_snapshot``, and any
@@ -923,13 +968,8 @@ class DuckLakeCatalog:
             for r in df[dead].itertuples():
                 gc_rows.append(
                     {
-                        "data_file_id": int(
-                            getattr(
-                                r,
-                                "data_file_id",
-                                getattr(r, "delete_file_id", 0),
-                            )
-                        ),
+                        # a delete file's row names its data file
+                        "data_file_id": int(r.data_file_id),
                         "table_id": int(r.table_id),
                         "path": r.path,
                         "path_is_relative": False,
@@ -952,9 +992,10 @@ class DuckLakeCatalog:
             self.tables["ducklake_inlined_data"] = inl[~dead].reset_index(
                 drop=True
             )
-        self._save()
+        self._unsaved = True
         return {"snapshots_expired": n_expired, "files_queued": len(gc_rows)}
 
+    @_statement
     def vacuum(self) -> int:
         """Delete queued files from disk; returns the number removed.
 
@@ -962,8 +1003,6 @@ class DuckLakeCatalog:
         rollback-able and the save here would persist mid-transaction
         catalog state, breaking the invariant that store readers never
         see a partial transaction."""
-        import os
-
         if self.in_txn():
             raise ValueError(
                 "VACUUM cannot run inside a transaction: its file deletes "
@@ -973,16 +1012,12 @@ class DuckLakeCatalog:
         removed = 0
         for r in q.itertuples():
             try:
-                if iofs.has_scheme(r.path) or os.path.isdir(r.path):
-                    # remote GC targets are insert-/delete- directories
-                    iofs.rmtree(r.path, ignore_errors=False)
-                else:
-                    iofs.remove(r.path)
+                _remove_path(r.path)
                 removed += 1
-            except (FileNotFoundError, OSError):
+            except OSError:
                 pass
         self.tables["ducklake_files_scheduled_for_deletion"] = q.iloc[0:0]
-        self._checked_save()
+        self._unsaved = True
         return removed
 
     def _bump_table_stats(
@@ -1006,24 +1041,18 @@ class DuckLakeCatalog:
                 ],
             )
 
+    @_statement
     def register_delete_files(
-        self,
-        table_id: int,
-        entries: list[dict],
-        removed_records: int,
-        commit: bool = True,
-    ) -> int | None:
+        self, table_id: int, entries: list[dict], removed_records: int
+    ) -> int:
         """Register one delete parquet PER data file (the spec's shape:
         at most one live delete file per data file).  Each entry:
         ``{data_file_id, path, delete_count, file_size_bytes}``.  The
         previous live delete files for those data files are
-        end-snapshotted.  ``commit=False`` stages the rows for a caller
-        that folds them into its own commit (MERGE publishes deletes and
-        appends in one atomic snapshot)."""
-        if self._txn_backup is not None:
-            self._txn_files += [e["path"] for e in entries]
-        next_cat, next_file = self._counters()
-        snapshot = self.current_snapshot + 1
+        end-snapshotted."""
+        self._new_files += [e["path"] for e in entries]
+        snapshot = self._change(f"deleted_from_table:{table_id}")
+        _, next_file = self._take_ids(n_file=len(entries))
 
         dels = self.tables["ducklake_delete_file"]
         if not dels.empty:
@@ -1058,24 +1087,19 @@ class DuckLakeCatalog:
         self._edit_stats(
             table_id, record_count=lambda c: c - removed_records
         )
-        if not commit:
-            return None
-        return self.commit_snapshot(
-            f"deleted_from_table:{table_id}", next_cat, next_file
-        )
+        return snapshot
 
-    def retire_data_files(
-        self, table_id: int, data_file_ids, commit: bool = True
-    ) -> int | None:
+    @_statement
+    def retire_data_files(self, table_id: int, data_file_ids) -> int:
         """Metadata-only delete of whole data files: their
-        ``ducklake_data_file`` rows and live delete files end at the next
-        snapshot, and the table's record count drops by their live rows
-        (record_count − delete_count) and its byte count by their bytes.
-        The files are not queued for GC: they still back the older
-        snapshots, and expire_snapshots queues them once those expire.
-        ``commit=False`` stages the change like register_delete_files."""
+        ``ducklake_data_file`` rows and live delete files end at the
+        statement's snapshot, and the table's record count drops by their
+        live rows (record_count − delete_count) and its byte count by
+        their bytes.  The files are not queued for GC: they still back
+        the older snapshots, and expire_snapshots queues them once those
+        expire."""
         fids = [int(f) for f in data_file_ids]
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f"deleted_from_table:{table_id}")
         data = self.tables["ducklake_data_file"]
         mask = (
             self.live_mask(data)
@@ -1099,15 +1123,7 @@ class DuckLakeCatalog:
             record_count=lambda c: c - removed,
             file_size_bytes=lambda c: c - removed_bytes,
         )
-        if not commit:
-            return None
-        return self.commit_staged(f"deleted_from_table:{table_id}")
-
-    def commit_staged(self, changes: str) -> int:
-        """Commit the rows that ``commit=False`` calls staged as one
-        snapshot."""
-        next_cat, next_file = self._counters()
-        return self.commit_snapshot(changes, next_cat, next_file)
+        return snapshot
 
     # -- data inlining (DuckLake spec "Data Inlining") -------------------------
 
@@ -1119,14 +1135,13 @@ class DuckLakeCatalog:
             return live
         return live[live["table_id"] == table_id].sort_values("row_id")
 
-    def append_inlined(
-        self, table_id: int, rows_json: list[str], commit: bool = True
-    ) -> int | None:
+    @_statement
+    def append_inlined(self, table_id: int, rows_json: list[str]) -> int:
         """Store a small insert's rows in the catalog itself — no parquet
         file is written.  Row ids come from the table's next_row_id
         counter (the same id space data files consume), so a later flush
         preserves stable row identity."""
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f"inserted_into_table:{table_id}")
         stats = self.tables["ducklake_table_stats"]
         srow = stats[stats["table_id"] == table_id]
         next_row_id = int(srow.iloc[0]["next_row_id"]) if not srow.empty else 0
@@ -1146,19 +1161,16 @@ class DuckLakeCatalog:
         self._bump_table_stats(
             table_id, len(rows_json), next_row_id + len(rows_json), 0
         )
-        if not commit:
-            return None
-        return self.commit_staged(f"inserted_into_table:{table_id}")
+        return snapshot
 
-    def end_inlined_rows(
-        self, table_id: int, row_ids: list[int], commit: bool = True
-    ) -> int | None:
+    @_statement
+    def end_inlined_rows(self, table_id: int, row_ids: list[int]) -> None:
         """MVCC-delete inlined rows: set end_snapshot (no delete files —
         the rows ARE catalog rows, so visibility is native)."""
         if not row_ids:
-            return None
+            return
         df = self.tables["ducklake_inlined_data"]
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f"deleted_from_table:{table_id}")
         mask = (
             self.live_mask(df)
             & (df["table_id"] == table_id)
@@ -1167,13 +1179,11 @@ class DuckLakeCatalog:
         n = int(mask.sum())
         self._end_rows("ducklake_inlined_data", mask, snapshot)
         self._edit_stats(table_id, record_count=lambda c: c - n)
-        if not commit:
-            return None
-        return self.commit_staged(f"deleted_from_table:{table_id}")
 
+    @_statement
     def truncate_table(self, name: str) -> int:
         table_id = self.table_id(name)
-        snapshot = self.current_snapshot + 1
+        snapshot = self._change(f"truncated_table:{table_id}")
         for t in (
             "ducklake_data_file",
             "ducklake_delete_file",
@@ -1185,8 +1195,7 @@ class DuckLakeCatalog:
             mask = self.live_mask(df) & (df["table_id"] == table_id)
             self._end_rows(t, mask, snapshot)
         self._edit_stats(table_id, record_count=0)
-        next_cat, next_file = self._counters()
-        return self.commit_snapshot(f"truncated_table:{table_id}", next_cat, next_file)
+        return snapshot
 
     def snapshots(self) -> pd.DataFrame:
         return self.tables["ducklake_snapshot"].copy()

@@ -287,14 +287,14 @@ _MERGE_INSERT_ACTION_RE = re.compile(
 
 
 def _parse_set_list(
-    set_clause: str, columns: list[str], stmt: str
+    set_clause: str, columns: list[str], stmt: str, generated=frozenset()
 ) -> dict[str, str]:
     """The ``SET`` list of every UPDATE form (UPDATE, UPDATE … FROM,
     MERGE's UPDATE arms, ON CONFLICT DO UPDATE, UPDATE … RETURNING) as
     {column: expression}.  ``(a, b) = (x, y)`` assigns pairwise; a target
     may be quoted or qualified (``t.v``) and resolves case-insensitively
-    against ``columns``; an unknown column and ``(…) = (SELECT …)``
-    raise."""
+    against ``columns``; an unknown column, a column in ``generated``
+    and ``(…) = (SELECT …)`` raise."""
     by_lower = {c.lower(): c for c in columns}
     out: dict[str, str] = {}
     for part in split_top_level(set_clause):
@@ -322,11 +322,18 @@ def _parse_set_list(
             col = by_lower.get(key.lower())
             if col is None:
                 raise ValueError(f"{stmt}: no column named {key!r}")
+            if col in generated:
+                raise ValueError(
+                    f'Cant update column "{col}" because it is a generated '
+                    "column"
+                )
             out[col] = value
     return out
 
 
-def _parse_merge_clauses(actions: str, columns: list[str]) -> list[dict]:
+def _parse_merge_clauses(
+    actions: str, columns: list[str], generated: set[str]
+) -> list[dict]:
     """Tokenize every WHEN clause of a MERGE, in order; raise on any
     clause the planner does not implement (a silently dropped clause
     would execute a partial merge).  Supported per the SQL shape:
@@ -334,7 +341,8 @@ def _parse_merge_clauses(actions: str, columns: list[str]) -> list[dict]:
     ``WHEN NOT MATCHED [BY TARGET] [AND cond] THEN INSERT
     [*|(cols) VALUES (…)]``, and ``WHEN NOT MATCHED BY SOURCE
     [AND cond] THEN UPDATE SET …|DELETE`` (target rows with no source
-    match).  SET lists resolve against the target's ``columns``."""
+    match).  SET lists resolve against the target's ``columns`` and may
+    not assign its ``generated`` ones."""
     starts = [m.start() for m in _MERGE_CLAUSE_START_RE.finditer(actions)]
     if not starts or actions[: starts[0]].strip():
         raise ValueError(f"MERGE: unparsable WHEN clauses: {actions!r}")
@@ -357,7 +365,9 @@ def _parse_merge_clauses(actions: str, columns: list[str]) -> list[dict]:
         cl: dict = {"matched": matched, "cond": cond, "by_source": by_source}
         if (matched or by_source) and (u := _MERGE_UPDATE_ACTION_RE.match(act)):
             cl["action"] = "update"
-            cl["assignments"] = _parse_set_list(u.group(1), columns, "MERGE")
+            cl["assignments"] = _parse_set_list(
+                u.group(1), columns, "MERGE", generated
+            )
         elif (matched or by_source) and _MERGE_DELETE_ACTION_RE.match(act):
             cl["action"] = "delete"
         elif by_source:
@@ -5695,22 +5705,17 @@ class DuckLakeSpark:
     def sql(self, query: str) -> DataFrame | None:
         """pull → execute each statement → push → return last result
         (exact lifecycle of ducklakexl.py:387-397; the returned DataFrame
-        is lazy just like the reference's DuckDBPyRelation — SURVEY §3.2)."""
+        is lazy just like the reference's DuckDBPyRelation — SURVEY §3.2).
+        Each statement commits at most one catalog snapshot; one that
+        fails commits nothing (see ``DuckLakeCatalog.statement``)."""
         self._pull()
         result = None
-        try:
-            for stmt in split_statements(query):
-                self.logger.debug("sql: %s", stmt[:200])
+        for stmt in split_statements(query):
+            self.logger.debug("sql: %s", stmt[:200])
+            with self.catalog.statement():
                 r = self._execute(stmt)
-                if r is not None:
-                    result = r
-        except Exception:
-            # catalog frames are edited in place, so a failed statement
-            # can leave unsaved edits behind; outside a transaction the
-            # store is the committed state to fall back to
-            if not self.catalog.in_txn():
-                self.catalog.refresh()
-            raise
+            if r is not None:
+                result = r
         self._push()
         return result
 
@@ -5754,7 +5759,9 @@ class DuckLakeSpark:
             if not (
                 _USE_RE.match(stmt) or _ATTACH_RE.match(stmt)
             ):
-                return self._attached[self.current_db]._execute(stmt)
+                lake = self._attached[self.current_db]
+                with lake.catalog.statement():
+                    return lake._execute(stmt)
         # TEMP tables: session-lifetime semantics approximated by regular
         # lake tables (the catalog store is per-engine-instance anyway in
         # tests; a production deployment would tag + GC them on close)
@@ -6358,7 +6365,9 @@ class DuckLakeSpark:
                     ).group(1)
                 )
                 kw = rm.group(1).upper()
-                projections = [p.strip() for p in split_top_level(proj)]
+                projections = [
+                    apply_expr_dialect(p.strip()) for p in split_top_level(proj)
+                ]
                 if kw in ("UPDATE", "DELETE"):
                     # UPDATE ... FROM must take the change-feed path below:
                     # _UPDATE_RE's lazy SET group would swallow the FROM
@@ -7840,26 +7849,24 @@ class DuckLakeSpark:
         deletes key on file path + position).  Returns rows flushed."""
         names = [name] if name else self.catalog.table_names()
         total = 0
-        for t in names:
-            tid = self.catalog.table_id(t)
-            inl = self.catalog.inlined_rows(tid)
-            if inl.empty:
-                continue
-            # decoded as a scan reads them (names as of each row's
-            # snapshot, initial defaults); bounded by the inlining limit
-            # per insert — one compact file is the whole point of flushing
-            df = self._inlined_frame(
-                inl, tid, None, self.table_schema(t), with_position=False
-            ).coalesce(1)
-            files, col_stats = self._write_files(t, tid, df)
-            # one atomic snapshot: end_inlined_rows stages at
-            # current+1 and register_data_files commits that same id
-            self.catalog.end_inlined_rows(
-                tid, [int(x) for x in inl["row_id"]], commit=False
-            )
-            if files:
-                self.catalog.register_data_files(tid, files, col_stats)
-            total += len(inl)
+        with self.catalog.statement():
+            for t in names:
+                tid = self.catalog.table_id(t)
+                inl = self.catalog.inlined_rows(tid)
+                if inl.empty:
+                    continue
+                # decoded as a scan reads them (names as of each row's
+                # snapshot, initial defaults); bounded by the inlining
+                # limit per insert — one compact file is the whole point
+                # of flushing
+                df = self._inlined_frame(
+                    inl, tid, None, self.table_schema(t), with_position=False
+                ).coalesce(1)
+                files, col_stats = self._write_files(t, tid, df)
+                self.catalog.end_inlined_rows(tid, [int(x) for x in inl["row_id"]])
+                if files:
+                    self.catalog.register_data_files(tid, files, col_stats)
+                total += len(inl)
         return total
 
     def _check_observer(self, tid: int, name: str, df: DataFrame):
@@ -8290,13 +8297,12 @@ class DuckLakeSpark:
         if target_file_bytes is None:
             # SET ducklake.target_file_size wins over the 128 MB default
             target_file_bytes = self._target_file_bytes()
-        # compaction swaps the table's FILE set atomically; inlined rows
-        # must be in that file set first or the swap would duplicate them
-        self.flush_inlined(name)
         tid = self.catalog.table_id(name)
         old = self.catalog.data_files(tid)
         dels = self.catalog.delete_files(tid)
-        if len(old) <= 1 and dels.empty and not (sort_by or zorder_by):
+        # the rewrite reads the inlined rows too, and the swap ends them
+        inlined = not self.catalog.inlined_rows(tid).empty
+        if len(old) <= 1 and dels.empty and not (inlined or sort_by or zorder_by):
             return {"compacted": False, "files_before": len(old)}
         total_bytes = int(old["file_size_bytes"].fillna(0).sum())
         n_out = max(1, -(-total_bytes // max(1, target_file_bytes)))
@@ -9138,7 +9144,7 @@ class DuckLakeSpark:
         ]
         scan = [p for p in kept if p not in covered]
         inlined = self.catalog.inlined_rows(tid)
-        wrote, inl_ids = False, []
+        inl_ids = []
         if not where:
             inl_ids = [int(r) for r in inlined.get("row_id", [])]
         elif scan or not inlined.empty:
@@ -9159,15 +9165,11 @@ class DuckLakeSpark:
                     ).collect()
                 ]
                 hit_pos = hit_pos.filter(F.col("file_path") != marker)
-            wrote = self._register_deletes(
-                name, tid, hit_pos, commit=False, paths=scan
-            )
+            self._register_deletes(name, tid, hit_pos, paths=scan)
         if inl_ids:
-            self.catalog.end_inlined_rows(tid, inl_ids, commit=False)
+            self.catalog.end_inlined_rows(tid, inl_ids)
         if retire:
-            self.catalog.retire_data_files(tid, retire, commit=False)
-        if wrote or inl_ids or retire:
-            self.catalog.commit_staged(f"deleted_from_table:{tid}")
+            self.catalog.retire_data_files(tid, retire)
         return None
 
     _DELETE_STRUCT = T.StructType(
@@ -9202,9 +9204,8 @@ class DuckLakeSpark:
         name: str,
         tid: int,
         hit_pos: DataFrame,
-        commit: bool = True,
         paths: list[str] | None = None,
-    ) -> bool:
+    ) -> None:
         """Write + register positional delete files for ``hit_pos``
         (DataFrame of file_path, pos against the LIVE scan).  The
         DuckLake-spec shape: ONE delete parquet per touched data file
@@ -9220,16 +9221,15 @@ class DuckLakeSpark:
         new row dropped inside that clustering; the catalog's counts come
         from the written footers (a file's new rows are its footer count
         minus its old ``delete_count``), so no checkpoint and no stats
-        job run.  Returns False, leaving no directory, if nothing
-        matched.  ``commit=False`` stages the catalog rows into the
-        caller's next commit (MERGE's atomic delete+append snapshot)."""
+        job run.  Nothing matched leaves no directory and no catalog
+        change."""
         from pyspark.sql import Window
 
         files = self.catalog.data_files(tid)
         if paths is None:
             paths = list(files["path"])
         elif not paths:
-            return False  # the hit scan read no file
+            return  # the hit scan read no file
         # a delete file without an owning data file stays live as it is;
         # only owned ones fold into their file's new delete file, so the
         # owner's old delete_count is exactly what the new file carries over
@@ -9308,9 +9308,8 @@ class DuckLakeSpark:
             )
         if not entries:
             iofs.rmtree(out_dir)
-            return False
-        self.catalog.register_delete_files(tid, entries, removed, commit=commit)
-        return True
+            return
+        self.catalog.register_delete_files(tid, entries, removed)
 
     def _update(self, name: str, set_clause: str, where: str | None) -> None:
         """UPDATE = write updated copies + positional-delete originals
@@ -9330,17 +9329,11 @@ class DuckLakeSpark:
             preds = self._conjunct_predicates(where, cols, (name, None))
         live = self.table_df(name, with_position=True, predicates=preds)
         hits = live.filter(where) if where else live
+        gen = self._generated_cols(self.catalog.table_id(name), schema)
         assignments = _parse_set_list(
-            set_clause, schema.fieldNames(), f"UPDATE {name}"
+            set_clause, schema.fieldNames(), f"UPDATE {name}",
+            {c for c, _x, _t in gen},
         )
-        gen_names = {
-            c
-            for c, _x, _t in self._generated_cols(
-                self.catalog.table_id(name), schema
-            )
-        }
-        if gen_names & set(assignments):
-            raise ValueError("cannot UPDATE a generated column")
         new_rows = hits.selectExpr(
             *[
                 f"CAST(({assignments[f.name]}) AS {_type_sql(f.dataType)}) "
@@ -9350,10 +9343,10 @@ class DuckLakeSpark:
                 for f in schema.fields
             ]
         )
-        # materialize new rows BEFORE the delete commits (the scan they came
+        # materialize new rows BEFORE the delete registers (the scan they came
         # from must not see the delete file); CHECK validation rides the
         # same materialization job so a violating UPDATE aborts before
-        # the delete — the statement stays atomic
+        # the delete is written
         new_rows, raise_on_violation = self._check_observer(
             self.catalog.table_id(name), name, new_rows
         )
@@ -9464,8 +9457,8 @@ class DuckLakeSpark:
         (untouched data_file_ids survive unchanged — a 1-row MERGE on a
         100 TB table writes one delete file and one small append file);
         UPDATE replacements and INSERT rows land as new append files.
-        Both register in ONE catalog snapshot (deletes staged with
-        commit=False), so the merge is atomic at the catalog level.
+        Both register in the statement's one catalog snapshot, so the
+        merge is atomic at the catalog level.
         Assumes each target row matches at most one source row (the SQL
         cardinality rule; violations produce one new row per match)."""
         name = _unqualify(target)
@@ -9488,7 +9481,9 @@ class DuckLakeSpark:
         tid = self.catalog.table_id(name)
         schema = self.table_schema(name)
         cols = [f.name for f in schema.fields]
-        clauses = _parse_merge_clauses(actions, cols)
+        clauses = _parse_merge_clauses(
+            actions, cols, {c for c, _x, _t in self._generated_cols(tid, schema)}
+        )
         matched_cl = [c for c in clauses if c["matched"]]
         bysrc_cl = [c for c in clauses if c.get("by_source")]
         notm_cl = [
@@ -9663,7 +9658,7 @@ class DuckLakeSpark:
         if new_rows is not None:
             # CHECK validation folds into the row-count job over the
             # checkpointed rows — a violating MERGE aborts HERE, before
-            # any delete is staged, keeping the statement atomic
+            # any delete is registered
             viol, checks = self._check_violation_col(tid)
             if viol is not None:
                 r = new_rows.agg(
@@ -9679,13 +9674,10 @@ class DuckLakeSpark:
             else:
                 n_new = new_rows.count()
         if del_pos is not None:
-            # with appends coming, stage the deletes into the appends'
-            # commit; a delete-only merge commits its own snapshot.  The
-            # BY SOURCE arms scan every file, the MATCHED arms only the
-            # files left by the source-bound predicates.
+            # the BY SOURCE arms scan every file, the MATCHED arms only
+            # the files left by the source-bound predicates
             self._register_deletes(
-                name, tid, del_pos, commit=(n_new == 0),
-                paths=None if bysrc_cl else match_paths,
+                name, tid, del_pos, paths=None if bysrc_cl else match_paths
             )
         if n_new > 0:
             self._write_dataframe(name, new_rows)

@@ -225,20 +225,20 @@ def sink_stream_to_lake(stream_df: DataFrame, lake, table: str):
     """foreachBatch sink into a DuckLake table: each micro-batch lands as
     parquet files registered in one catalog snapshot — atomic,
     time-travelable, and exactly-once under micro-batch replay: the
-    highest committed ``epoch_id`` is staged as a table tag in the SAME
-    catalog snapshot as the batch's data files (set_tag(commit=False)
-    folds into register_data_files' commit), so a restarted stream that
-    re-delivers an already-committed epoch is skipped, and a crash before
-    the commit leaves neither files nor watermark — the replay then
-    re-executes cleanly."""
+    highest committed ``epoch_id`` is a table tag set in the SAME catalog
+    statement, hence the same snapshot, as the batch's data files, so a
+    restarted stream that re-delivers an already-committed epoch is
+    skipped, and a crash before the commit leaves neither files nor
+    watermark — the replay then re-executes cleanly."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         tid = lake.catalog.table_id(table)
         last = lake.catalog.get_tag(tid, _EPOCH_TAG)
         if last is not None and int(last) >= epoch_id:
             return  # replayed micro-batch, already committed
-        lake.catalog.set_tag(tid, _EPOCH_TAG, str(epoch_id), commit=False)
-        lake._write_dataframe(table, batch_df)
+        with lake.catalog.statement():
+            lake.catalog.set_tag(tid, _EPOCH_TAG, str(epoch_id))
+            lake._write_dataframe(table, batch_df)
 
     return (
         stream_df.writeStream.outputMode("append")
@@ -252,18 +252,18 @@ def upsert_stream_to_lake(stream_df: DataFrame, lake, table: str,
     """foreachBatch CDC-apply: each micro-batch MERGEs into the lake
     table keyed on ``keys`` — matched rows update, new keys insert —
     with the delete-file + append commit shape (a 1-row change never
-    rewrites the table) and the same staged epoch-tag exactly-once guard
-    as the append sink: the tag folds into MERGE's single catalog
-    snapshot, so a replayed epoch is skipped and a crash before commit
-    leaves no partial state.  This is the streaming ingest pattern for
-    mutable sources (CDC feeds, upsert topics) at 100 TB."""
+    rewrites the table) and the same epoch-tag exactly-once guard as the
+    append sink: the tag and the MERGE run as one catalog statement, so
+    they land in one snapshot, a replayed epoch is skipped and a crash
+    before commit leaves no partial state.  This is the streaming ingest
+    pattern for mutable sources (CDC feeds, upsert topics) at 100 TB."""
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
+        lake._pull()
         tid = lake.catalog.table_id(table)
         last = lake.catalog.get_tag(tid, _EPOCH_TAG)
         if last is not None and int(last) >= epoch_id:
             return  # replayed micro-batch, already committed
-        lake.catalog.set_tag(tid, _EPOCH_TAG, str(epoch_id), commit=False)
         # foreachBatch runs in an isolated micro-batch session clone; a
         # GLOBAL temp view crosses into the lake's parent session
         view = f"__cdc_batch_{table}"
@@ -275,12 +275,15 @@ def upsert_stream_to_lake(stream_df: DataFrame, lake, table: str,
         )
         cols = ", ".join(batch_df.columns)
         vals = ", ".join(f"{src}.{c}" for c in batch_df.columns)
-        lake.sql(
-            f"MERGE INTO {table} "
-            f"USING (SELECT * FROM global_temp.{view}) AS {src} ON {cond} "
-            f"WHEN MATCHED THEN UPDATE SET {sets} "
-            f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
-        )
+        with lake.catalog.statement():
+            lake.catalog.set_tag(tid, _EPOCH_TAG, str(epoch_id))
+            lake._execute(
+                f"MERGE INTO {table} "
+                f"USING (SELECT * FROM global_temp.{view}) AS {src} "
+                f"ON {cond} WHEN MATCHED THEN UPDATE SET {sets} "
+                f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
+            )
+        lake._push()
 
     return (
         stream_df.writeStream.outputMode("append")

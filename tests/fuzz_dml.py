@@ -11,8 +11,10 @@ lakehouse plane AND a DuckDB connection, comparing the full table state
 after every statement.  This is the write-path complement of
 fuzz_explore.py: it exercises file mints, positional delete files,
 inlined rows, schema evolution, snapshot bookkeeping and whole-file
-metadata-only deletes against DuckDB's transactional semantics.  Finds
-get fixed and pinned as curated flows in tests/test_lakehouse.py.
+metadata-only deletes against DuckDB's transactional semantics, and
+checks that each statement commits at most one snapshot (none when it
+fails).  Finds get fixed and pinned as curated flows in
+tests/test_lakehouse.py.
 """
 
 from __future__ import annotations
@@ -295,6 +297,7 @@ def run_scripts(spark, n: int, seed: int, work_dir: str | None = None) -> int:
         snap_states: dict[int, list] = {}  # snapshot_id -> duck state
         for idx, st in enumerate(stmts):
             eng_err = duck_err = None
+            pre = lake.catalog.current_snapshot
             try:
                 lake.sql(st)
             except Exception as e:
@@ -303,6 +306,13 @@ def run_scripts(spark, n: int, seed: int, work_dir: str | None = None) -> int:
                 con.execute(st)
             except Exception as e:
                 duck_err = e
+            # a statement commits at most one snapshot, a failed one none
+            moved = lake.catalog.current_snapshot - pre
+            if moved > (0 if eng_err else 1):
+                print(f"\n=== {moved} SNAPSHOTS script {si} stmt {idx} "
+                      f"({'failed' if eng_err else 'succeeded'}) ===\n{st}\n")
+                finds += 1
+                break
             # occasionally COMPACT mid-script (engine-only maintenance —
             # a no-op relationally): the state compare AND the end-of-
             # script time-travel replay must both survive file rewrites

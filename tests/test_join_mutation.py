@@ -2,9 +2,11 @@
 
 DELETE … USING, UPDATE … FROM and INSERT … ON CONFLICT DO UPDATE run as
 MERGE's arms; every SET list (UPDATE, UPDATE … FROM, MERGE, ON CONFLICT,
-UPDATE … RETURNING) goes through ``_parse_set_list``.  Each SET form is
-checked against DuckDB running the same statements (DuckDB 1.0 has no
-MERGE: its twin is the equivalent UPDATE … FROM)."""
+UPDATE … RETURNING) goes through ``_parse_set_list``, which also
+refuses assignments to generated columns.  Each SET form and each
+RETURNING projection is checked against DuckDB running the same
+statements (DuckDB 1.0 has no MERGE: its twin is the equivalent
+UPDATE … FROM)."""
 
 from __future__ import annotations
 
@@ -115,6 +117,71 @@ def test_set_list_rejects_unknown_columns_and_subquery_tuples(lake):
     with pytest.raises(NotImplementedError, match="SELECT"):
         lake.sql("UPDATE jm_e SET (v) = (SELECT 2)")
     assert rows(lake.sql("SELECT * FROM jm_e")) == [(1, 10)]
+
+
+@pytest.mark.parametrize(
+    "ours, theirs",
+    [
+        ("UPDATE jm_g SET b = 5", None),
+        ("UPDATE jm_g SET b = 5 FROM jm_gk WHERE jm_g.a = jm_gk.a", None),
+        (
+            "MERGE INTO jm_g USING jm_gk ON jm_g.a = jm_gk.a "
+            "WHEN MATCHED THEN UPDATE SET b = 5",
+            "UPDATE jm_g SET b = 5 FROM jm_gk WHERE jm_g.a = jm_gk.a",
+        ),
+        (
+            "INSERT INTO jm_g (a, v) VALUES (1, 3) "
+            "ON CONFLICT (a) DO UPDATE SET b = 5",
+            None,
+        ),
+    ],
+    ids=["update", "update-from", "merge", "on-conflict"],
+)
+def test_set_list_refuses_generated_columns(lake, duck, twin, ours, theirs):
+    """Every UPDATE form refuses to assign a generated column, with
+    DuckDB's message, and changes nothing."""
+    twin("CREATE TABLE jm_g(a INTEGER PRIMARY KEY, v INTEGER, b AS (v * 2))")
+    twin("INSERT INTO jm_g (a, v) VALUES (1, 10), (2, 20)")
+    twin("CREATE TABLE jm_gk(a INTEGER)")
+    twin("INSERT INTO jm_gk VALUES (1)")
+    with pytest.raises(Exception, match="generated column") as theirs_err:
+        duck.execute(theirs or ours)
+    msg = str(theirs_err.value).split("Error: ", 1)[1].rstrip("!")
+    before = lake.catalog.current_snapshot
+    with pytest.raises(ValueError, match=msg):
+        lake.sql(ours)
+    assert lake.catalog.current_snapshot == before
+    assert _same(lake, duck, "jm_g") == [(1, 10, 20), (2, 20, 40)]
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "UPDATE jm_rp SET v = v + 1 WHERE id = 1 RETURNING id, v // 2 AS h",
+        "DELETE FROM jm_rp WHERE id = 2 RETURNING v // 3 AS h",
+    ],
+)
+def test_returning_projections_read_duckdb_dialect(lake, duck, twin, stmt):
+    twin("CREATE TABLE jm_rp(id INTEGER, v INTEGER)")
+    twin("INSERT INTO jm_rp VALUES (1, 7), (2, 20)")
+    got = rows(lake.sql(stmt))
+    assert got == sorted(duck.execute(stmt).fetchall())
+    _same(lake, duck, "jm_rp")
+
+
+def test_returning_an_unknown_column_commits_nothing(lake):
+    lake.sql("CREATE TABLE jm_ru(id INTEGER, v INTEGER)")
+    lake.sql("INSERT INTO jm_ru VALUES (1, 7), (2, 20)")
+    before = lake.catalog.current_snapshot
+    for stmt in (
+        "UPDATE jm_ru SET v = v + 1 WHERE id = 1 RETURNING nope",
+        "DELETE FROM jm_ru WHERE id = 2 RETURNING nope",
+        "INSERT INTO jm_ru VALUES (3, 30) RETURNING nope",
+    ):
+        with pytest.raises(Exception, match="nope"):
+            lake.sql(stmt)
+        assert lake.catalog.current_snapshot == before
+        assert rows(lake.sql("SELECT * FROM jm_ru")) == [(1, 7), (2, 20)]
 
 
 def _compacted(lake):

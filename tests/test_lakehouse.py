@@ -1832,6 +1832,21 @@ def test_transaction_commit_and_rollback(lake, tmp_path):
     assert rows(lake.sql("SELECT * FROM tx;")) == [(1,), (4,)]
 
 
+def test_rollback_removes_delete_files(lake, tmp_path):
+    """A delete file is a directory of parquet parts; ROLLBACK removes it
+    like the data files the transaction wrote."""
+    import glob
+
+    lake.sql("CREATE TABLE txd(id INTEGER);")
+    lake.sql("INSERT INTO txd VALUES (1), (2);")
+    lake.sql("BEGIN; DELETE FROM txd WHERE id = 2;")
+    assert rows(lake.sql("SELECT * FROM txd;")) == [(1,)]
+    lake.sql("ROLLBACK;")
+    assert rows(lake.sql("SELECT * FROM txd;")) == [(1,), (2,)]
+    pattern = str(tmp_path / "data" / "txd" / "delete-*" / "**" / "*.parquet")
+    assert not glob.glob(pattern, recursive=True)
+
+
 def test_transaction_crash_leaves_store_clean(spark, tmp_path):
     lake1 = DuckLakeSpark(
         spark=spark,
